@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from finance_data_pipeline_spark.functions import let_
+
 # --- normalization / shingling ------------------------------------------
 
 
@@ -29,18 +31,6 @@ def normalized(col="text"):
 def tokens(col="text"):
     """Whitespace tokenization of normalized text."""
     return F.split(normalized(col), r"\s+")
-
-
-def _let(col, fn):
-    """Expression-level let-binding (see functions.let_): evaluate
-    ``col`` once per row; reference it as a bound VALUE inside ``fn``.
-    HOF lambda bodies are interpreted with NO invariant hoisting — a
-    sliding-window transform whose lambda references the tokenizer
-    expression re-runs the regex split once PER WINDOW (quadratic in
-    doc length); binding the token array first makes it once per row
-    (measured ~25% off the shingle-explode stage at sf0.1 on short
-    docs; the gap grows with document length)."""
-    return F.element_at(F.transform(F.array(col), fn), 1)
 
 
 def word_shingles(col="text", k: int = 3):
@@ -55,7 +45,7 @@ def word_shingles(col="text", k: int = 3):
             F.when(n >= k, sh).otherwise(F.array(F.array_join(tk, " ")))
         )
 
-    return _let(tokens(col), build)
+    return let_(tokens(col), build)
 
 
 def char_ngrams(col="text", n: int = 4):
@@ -69,7 +59,7 @@ def char_ngrams(col="text", n: int = 4):
             F.transform(idx, lambda i: F.substring(s, i, F.lit(n)))
         )
 
-    return _let(normalized(col), build)
+    return let_(normalized(col), build)
 
 
 # --- X1: exact dedup ------------------------------------------------------
@@ -78,7 +68,7 @@ def char_ngrams(col="text", n: int = 4):
 def _sliding_grams(text_col: str, n: int):
     """Non-distinct length-``n`` token windows joined with single
     spaces; [] for docs shorter than n tokens. The token array is
-    _let-bound so the regex split runs once per row, not once per
+    let_-bound so the regex split runs once per row, not once per
     window (the word_shingles fix)."""
 
     def build(tk):
@@ -89,7 +79,7 @@ def _sliding_grams(text_col: str, n: int):
             F.transform(idx, lambda i: F.array_join(F.slice(tk, i + 1, n), " ")),
         ).otherwise(F.array().cast("array<string>"))
 
-    return _let(tokens(text_col), build)
+    return let_(tokens(text_col), build)
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -222,6 +212,20 @@ def _spread(df: DataFrame) -> DataFrame:
     except Exception:
         pass
     return df.repartition(target)
+
+
+_CHECKPOINT_EVERY = 6
+
+
+def _chain_rounds(state: DataFrame, step, rounds: int) -> DataFrame:
+    """Chain ``rounds`` lazy calls of ``step``, which must read the state
+    once: one job, no per-round barrier (5-round pagerank 5.6 s → 3.1 s),
+    lineage cut after every _CHECKPOINT_EVERY-th round but the last."""
+    for i in range(1, rounds + 1):
+        state = step(state)
+        if i % _CHECKPOINT_EVERY == 0 and i < rounds:
+            state = state.localCheckpoint()
+    return state
 
 
 def minhash_signatures(
@@ -1413,8 +1417,8 @@ def line_dedup(
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    # token array _let-bound: one regex split per row, not per segment
-    segs = _let(tokens(text_col), _build_segs)
+    # token array let_-bound: one regex split per row, not per segment
+    segs = let_(tokens(text_col), _build_segs)
     seg_rows = _spread(docs).select(
         F.col(id_col), F.posexplode(segs).alias("seg_idx", "seg")
     ).withColumn("_h", md5_token_hash("seg"))
@@ -1439,8 +1443,6 @@ def line_dedup(
         .groupBy(id_col)
         .agg(F.collect_list("seg_idx").alias("_ri"))
     )
-    from finance_data_pipeline_spark.functions import let_
-
     ri = F.coalesce(F.col("_ri"), F.array().cast("array<int>"))
     # let_-bind the segment array so the (interpreted) segmentation
     # transform runs ONCE per row across all three consumers (size,
@@ -1482,18 +1484,16 @@ def line_dedup(
 # --- X6++: Bloom-filter decontamination (constant-size build side) --------
 
 
-def _bloom_positions(sh: F.Column, m: int) -> F.Column:
+def _bloom_positions(sh: F.Column, m: int) -> list[F.Column]:
     """Three independent bit positions per shingle from ONE md5: hex
     digits 1-10 / 11-20 / 21-30 are disjoint 40-bit slices of the
     digest, reduced mod ``m``. Engine-portable (DuckDB rebuilds the
     identical values with positional hex shifts)."""
     md = F.md5(sh)
-    return F.array(
-        *[
-            F.conv(F.substring(md, 1 + 10 * j, 10), 16, 10).cast("long") % m
-            for j in range(3)
-        ]
-    )
+    return [
+        F.conv(F.substring(md, 1 + 10 * j, 10), 16, 10).cast("long") % m
+        for j in range(3)
+    ]
 
 
 def _bloom_wb(sh: F.Column, m: int) -> F.Column:
@@ -1506,18 +1506,17 @@ def _bloom_wb(sh: F.Column, m: int) -> F.Column:
     # Double division is bit-exact only while pos < 2^53, and pos < m
     # always — fail loudly instead of diverging from the build side if
     # a caller ever asks for a bitmap that large.
-    assert m <= 1 << 52, f"bloom m={m} exceeds the exact float-div range"
-    md = F.md5(sh)
-    out = []
-    for j in range(3):
-        pos = F.conv(F.substring(md, 1 + 10 * j, 10), 16, 10).cast("long") % m
-        out.append(
+    if m > 1 << 52:
+        raise ValueError(f"bloom m={m} exceeds the exact float-div range")
+    return F.array(
+        *[
             F.struct(
                 F.floor(pos / 63).cast("long").alias("w"),
                 (pos % 63).cast("int").alias("b"),
             )
-        )
-    return F.array(*out)
+            for pos in _bloom_positions(sh, m)
+        ]
+    )
 
 
 def bloom_decontaminate(
@@ -1562,7 +1561,7 @@ def bloom_decontaminate(
         .distinct()
     )
     bloom = (
-        bench_sh.select(F.explode(_bloom_positions(F.col("sh"), m)).alias("pos"))
+        bench_sh.select(F.explode(F.array(*_bloom_positions(F.col("sh"), m))).alias("pos"))
         .select(
             F.expr("pos div 63").alias("w"),
             (F.col("pos") % 63).cast("int").alias("b"),

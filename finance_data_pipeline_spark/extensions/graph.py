@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from finance_data_pipeline_spark.extensions.dedup import _spread
+from finance_data_pipeline_spark.extensions.dedup import _chain_rounds, _spread
 
 
 def pagerank(
@@ -26,9 +26,7 @@ def pagerank(
     iters: int = 5,
     damping_pct: int = 85,
     scale: int = 1_000_000_000,
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint_every: int = 6,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-iteration integer PageRank over directed (src, dst) long
     edges. Returns (node, rank_scaled, pagerank) where rank_scaled is
@@ -45,20 +43,20 @@ def pagerank(
     nothing — the standard simplification; with symmetrized edges every
     node has outdeg ≥ 1 and no mass is lost).
 
+    ``seeds`` makes it personalized PageRank (the topic-sensitive
+    variant, Haveliwala 2002): a one-column (node) frame, intersected
+    with the graph's node set; teleport mass then returns ONLY to those
+    seeds, N becomes their count, and the initial rank is scale // N on
+    seeds and 0 elsewhere — ranks measure proximity to the seeds rather
+    than global centrality (the "more like these" expansion primitive).
+    No seed in the graph → every rank is 0.
+
     Scale shape per iteration: one join of the edge list against the
     N-row rank vector (shuffle on src), one map-side-combined sum into
-    dst, one left join back onto nodes. Rounds CHAIN LAZILY — each
-    round references the previous rank vector exactly once, so the
-    plan grows linearly, and running all rounds as ONE job lets the
-    scheduler pipeline stages instead of paying a blocking
-    materialization barrier per round (guide §2.4/§1.2 — the former
-    per-round localCheckpoint cost one eager job each: measured 5.6 s
-    → 3.1 s for the 5-round bench query). ``checkpoint_every`` cuts
-    lineage with localCheckpoint every that-many rounds so iters ≫ 5
-    still cannot stack deep plans (connected_components' discipline;
-    the default re-checkpoints only past round 6). The only
-    driver-side values are N (one count) and the constant teleport —
-    no rank data ever collects.
+    dst, one left join back onto nodes. Rounds chain lazily through
+    dedup._chain_rounds (one job for all rounds, lineage cut past round
+    6). The only driver-side values are N (one count) and the constant
+    teleport — no rank data ever collects.
 
     Overflow headroom: Σ contribs ≤ N·scale and the damping multiply
     stays < 2^63 while N·scale·damping_pct < 9.2e18 — at scale=1e9
@@ -71,9 +69,7 @@ def pagerank(
     # the lineitem⋈orders distinct join) in its own job. Edges are two
     # longs per row — materializing them is the same safe trade the
     # ed_deg checkpoint below already makes.
-    ed = _spread(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    ).localCheckpoint()
+    ed = _spread(edges.select("src", "dst")).localCheckpoint()
     # Fused node-set + out-degree pass (guide §2.4): each edge emits
     # its endpoints row-locally (src tagged 1, dst tagged 0) and ONE
     # map-side-combined groupBy yields both the distinct node set and
@@ -95,9 +91,29 @@ def pagerank(
         .agg(F.sum("_o").cast("long").alias("deg"))
         .localCheckpoint()
     )
-    n_nodes = nd.count()
     nodes = nd.select("node")
-    if n_nodes == 0:
+    # Teleport set: every node, or the seeds that are graph nodes
+    # (flagged with _is_seed on the node frame the rounds join onto).
+    if seeds is None:
+        n_tele = nd.count()
+        base, share = nodes, F.lit
+    else:
+        seed_nodes = (
+            nodes.join(seeds.select(F.col(seeds.columns[0]).alias("node")), "node")
+            .select("node")
+            .localCheckpoint()
+        )
+        n_tele = seed_nodes.count()
+        base = (
+            nodes.join(seed_nodes.withColumn("_is_seed", F.lit(True)), "node", "left")
+            .select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
+            .localCheckpoint()
+        )
+
+        def share(v):
+            return F.when(F.col("_is_seed"), F.lit(v)).otherwise(F.lit(0))
+
+    if n_tele == 0:
         return nodes.select(
             "node",
             F.lit(0).cast("long").alias("rank_scaled"),
@@ -105,27 +121,25 @@ def pagerank(
         )
     deg = nd.filter(F.col("deg") > 0).select(F.col("node").alias("src"), "deg")
     ed_deg = ed.join(deg, "src").localCheckpoint()
-    teleport = ((100 - damping_pct) * scale // 100) // n_nodes
+    teleport = ((100 - damping_pct) * scale // 100) // n_tele
 
-    ranks = nodes.select(
-        "node", F.lit(scale // n_nodes).cast("long").alias("r")
-    )
-    for i in range(iters):
+    def step(ranks):
         contrib = ed_deg.join(ranks, ed_deg["src"] == ranks["node"]).select(
             F.col("dst").alias("node"), F.expr("r div deg").alias("c")
         )
         sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = nodes.join(sums, "node", "left").select(
+        return base.join(sums, "node", "left").select(
             "node",
             (
-                F.lit(teleport)
+                share(teleport)
                 + F.expr(
                     f"({damping_pct} * coalesce(s, CAST(0 AS BIGINT))) div 100"
                 )
             ).cast("long").alias("r"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint()
+
+    ranks = base.select("node", share(scale // n_tele).cast("long").alias("r"))
+    ranks = _chain_rounds(ranks, step, iters)
     return ranks.select(
         "node",
         F.col("r").alias("rank_scaled"),
@@ -256,7 +270,6 @@ def label_propagation(
     rounds: int = 3,
     a: str = "id_a",
     b: str = "id_b",
-    checkpoint_every: int = 6,
 ) -> DataFrame:
     """Synchronous frequency label propagation over an undirected pair
     graph — community detection that, unlike connected components
@@ -283,11 +296,10 @@ def label_propagation(
     graph size. The symmetrized edge list is localCheckpoint()ed once
     up front so `rounds` iterations re-read a materialized frame
     instead of re-deriving the upstream near-dup cascade per round
-    (the dup_triangles lesson). Rounds CHAIN LAZILY — each round
-    references the previous label vector exactly once, so the former
-    per-round eager localCheckpoint (one blocking job per round) is
-    pure overhead (pagerank's r9 lesson, guide §2.4/§1.2);
-    ``checkpoint_every`` bounds lineage for rounds ≫ the default.
+    (the dup_triangles lesson). Rounds chain lazily through
+    dedup._chain_rounds — each round references the previous label
+    vector exactly once, so a per-round eager localCheckpoint (one
+    blocking job per round) would be pure overhead.
 
     Returns (node, community) for every node in the pair graph.
     """
@@ -309,123 +321,20 @@ def label_propagation(
         .select("node", F.col("node").alias("lbl"))
         .localCheckpoint()
     )
-    for i in range(rounds):
+    w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lbl"))
+
+    def step(labels):
         votes = (
             sym.join(labels, sym["v"] == labels["node"])
             .select(F.col("u").alias("node"), "lbl")
             .groupBy("node", "lbl")
             .agg(F.count("*").alias("c"))
         )
-        w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lbl"))
-        labels = (
+        return (
             votes.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("node", "lbl")
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and (i + 1) < rounds:
-            labels = labels.localCheckpoint()
+
+    labels = _chain_rounds(labels, step, rounds)
     return labels.select("node", F.col("lbl").alias("community"))
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iters: int = 5,
-    damping_pct: int = 85,
-    scale: int = 1_000_000_000,
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint_every: int = 6,
-) -> DataFrame:
-    """Personalized PageRank (the topic-sensitive variant, Haveliwala
-    2002): teleport mass returns ONLY to the seed set, so ranks measure
-    proximity to the seeds rather than global centrality — the
-    "more like these" expansion primitive (seed domains → related
-    domains; seed customers → similar customers). Same integer
-    fixed-point discipline as pagerank(): every division is integer
-    floor division, so the whole iteration replays bit-exactly in an
-    unrolled SQL oracle.
-
-    ``seeds`` is a one-column (node) frame; it is intersected with the
-    graph's node set, counted once on the driver (a bounded count, like
-    pagerank's N), and broadcast into the per-round teleport term.
-    Initial rank: scale // n_seeds on seeds, 0 elsewhere — total mass
-    conserved up to floor rounding exactly as the oracle computes it.
-
-    Scale shape per round: identical to pagerank() — one edge⋈rank
-    shuffle, one map-side-combined sum, one left join onto nodes, with
-    rounds chaining lazily into one job and ``checkpoint_every``
-    truncating lineage past round 6 (see pagerank's docstring for the
-    measured per-round-barrier cost this removes).
-    """
-    # Edge list materialized once — see pagerank() above (nd, seed_nodes
-    # and ed_deg all sit downstream of it).
-    ed = _spread(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    ).localCheckpoint()
-    # Fused node-set + out-degree pass — see pagerank() above.
-    nd = (
-        ed.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src").alias("node"), F.lit(1).alias("_o")),
-                    F.struct(F.col("dst").alias("node"), F.lit(0).alias("_o")),
-                )
-            ).alias("_n")
-        )
-        .select("_n.node", "_n._o")
-        .groupBy("node")
-        .agg(F.sum("_o").cast("long").alias("deg"))
-        .localCheckpoint()
-    )
-    nodes = nd.select("node")
-    seed_nodes = (
-        nodes.join(seeds.select(F.col(seeds.columns[0]).alias("node")), "node")
-        .select("node")
-        .localCheckpoint()
-    )
-    n_seeds = seed_nodes.count()
-    if n_seeds == 0:
-        return nodes.select(
-            "node",
-            F.lit(0).cast("long").alias("rank_scaled"),
-            F.lit(0.0).alias("pagerank"),
-        )
-    deg = nd.filter(F.col("deg") > 0).select(F.col("node").alias("src"), "deg")
-    ed_deg = ed.join(deg, "src").localCheckpoint()
-    teleport = ((100 - damping_pct) * scale // 100) // n_seeds
-
-    flagged = nodes.join(
-        seed_nodes.withColumn("_is_seed", F.lit(True)), "node", "left"
-    ).select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
-    flagged = flagged.localCheckpoint()
-    ranks = flagged.select(
-        "node",
-        F.when(F.col("_is_seed"), F.lit(scale // n_seeds))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("r"),
-    )
-    for i in range(iters):
-        contrib = ed_deg.join(ranks, ed_deg["src"] == ranks["node"]).select(
-            F.col("dst").alias("node"), F.expr("r div deg").alias("c")
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = flagged.join(sums, "node", "left").select(
-            "node",
-            (
-                F.when(F.col("_is_seed"), F.lit(teleport)).otherwise(F.lit(0))
-                + F.expr(
-                    f"({damping_pct} * coalesce(s, CAST(0 AS BIGINT))) div 100"
-                )
-            )
-            .cast("long")
-            .alias("r"),
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint()
-    return ranks.select(
-        "node",
-        F.col("r").alias("rank_scaled"),
-        (F.col("r") / F.lit(float(scale))).alias("pagerank"),
-    )

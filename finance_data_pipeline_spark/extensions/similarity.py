@@ -17,8 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from finance_data_pipeline_spark.extensions.dedup import _spread
-from finance_data_pipeline_spark.functions import cosine, dot, l2_norm, micro_avg
+from finance_data_pipeline_spark.extensions.dedup import _chain_rounds, _spread
+from finance_data_pipeline_spark.functions import cosine, dot, l2_norm, let_, micro_avg
 
 
 def valid_vectors(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -562,16 +562,6 @@ def semantic_dedup(
     )
 
 
-def _let(col: F.Column, fn) -> F.Column:
-    """Single-use let-binding at the expression level: evaluate ``col``
-    ONCE per row and reference it any number of times inside ``fn`` (a
-    lambda Column → Column). HOF lambda variables are bound VALUES, so
-    this survives CollapseProject / predicate pushdown, which re-inline
-    a plain column alias into every downstream reference and would
-    re-evaluate an expensive fold per reference."""
-    return F.element_at(F.transform(F.array(col), fn), 1)
-
-
 def _packed_centroids(centroids: DataFrame) -> DataFrame:
     """One-row frame holding every (_cid, _ce, _cn) struct sorted by
     _cid — the broadcastable form a ROW-LOCAL argmax iterates. k is
@@ -683,8 +673,8 @@ def kmeans_clusters(
     rows), one map-side-combined max_by (assignment), one posexplode →
     groupBy(cluster, pos) — keyed on k·dim ≤ a few thousand groups —
     and a k-row collect_list rebuild. No driver state; iterations
-    extend the lineage, so production runs (iters ≫ 2) would
-    localCheckpoint per round exactly as connected_components does.
+    chain lazily through dedup._chain_rounds, which bounds the lineage
+    of long runs (iters ≫ 2).
     Empty clusters drop out of the next round (both engines compute
     means over member-bearing clusters only).
 
@@ -735,6 +725,42 @@ def _bounded_train_set(v, train_n, k):
     return t
 
 
+def _lloyd_means(
+    assigned: DataFrame, keys: list[str], vec: str, scale: int
+) -> DataFrame:
+    """The fixed-point Lloyd centroid update shared by kmeans_centroids
+    and pq_codebooks: the elementwise mean of the ``vec`` arrays of
+    every assigned row, grouped by ``keys`` (the last key is the code,
+    renamed ``_cid``; any earlier key, such as pq's block ``_b``, is
+    kept). Components are summed as round(x·scale) longs, so the
+    partial-aggregation order cannot perturb the mean and the update
+    replays bit-exactly in SQL; the per-position means are rebuilt into
+    ``_ce`` in position order."""
+    *outer, code = keys
+    means = (
+        assigned.select(*keys, F.posexplode(vec).alias("_pos", "_c"))
+        .groupBy(*keys, "_pos")
+        .agg(
+            F.sum(F.round(F.col("_c") * scale, 0).cast("long")).alias("_s"),
+            F.count("*").alias("_n"),
+        )
+        .select(
+            *keys,
+            "_pos",
+            (F.col("_s").cast("double") / (F.lit(float(scale)) * F.col("_n"))).alias("_m"),
+        )
+    )
+    return (
+        means.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("_pos", "_m"))).alias("_pm"))
+        .select(
+            *outer,
+            F.col(code).alias("_cid"),
+            F.transform("_pm", lambda s: s["_m"]).alias("_ce"),
+        )
+    )
+
+
 def kmeans_centroids(
     vectors: DataFrame,
     k: int = 8,
@@ -767,31 +793,13 @@ def kmeans_centroids(
     cents = v.filter(F.col("_id") < k).select(
         F.col("_id").alias("_cid"), F.col("_e").alias("_ce")
     )
-    for _ in range(iters):
-        assigned = _assign_to_centroids(v, cents)
-        comp = assigned.select(
-            "cluster_id", F.posexplode("_e").alias("_pos", "_c")
-        )
-        means = (
-            comp.groupBy("cluster_id", "_pos")
-            .agg(
-                F.sum(F.round(F.col("_c") * scale, 0).cast("long")).alias("_s"),
-                F.count("*").alias("_n"),
-            )
-            .select(
-                "cluster_id",
-                "_pos",
-                (F.col("_s").cast("double") / (F.lit(float(scale)) * F.col("_n"))).alias("_m"),
-            )
-        )
-        cents = (
-            means.groupBy("cluster_id")
-            .agg(F.array_sort(F.collect_list(F.struct("_pos", "_m"))).alias("_pm"))
-            .select(
-                F.col("cluster_id").alias("_cid"),
-                F.transform("_pm", lambda s: s["_m"]).alias("_ce"),
-            )
-        )
+    cents = _chain_rounds(
+        cents,
+        lambda c: _lloyd_means(
+            _assign_to_centroids(v, c), ["cluster_id"], "_e", scale
+        ),
+        iters,
+    )
     # Materialize the k-row centroid frame (same move as
     # connected_components' per-round localCheckpoint): consumers
     # reference it several times (assignment, probe scoring, GEMM
@@ -842,9 +850,9 @@ def kmeans_cluster_quality(
     # k-row rollup. Per-pair float ops are unchanged → same sims, same
     # argmax, same micro-unit sums.
     vn = v.select("_id", "_e", l2_norm("_e").alias("_vn"))
-    rep = _let(
+    rep = let_(
         _row_local_scores(F.col("_vn"), F.col("_e")),
-        lambda arr: _let(
+        lambda arr: let_(
             F.array_max(arr),
             lambda best: F.struct(
                 best["cid"].alias("cluster_id"),
@@ -1173,6 +1181,10 @@ def pq_codebooks(
     oracle-checked registry configuration at test SFs, where the
     corpus IS sample-sized.
     """
+    # ann_topk_pq's ADC map key packs (_b, _cid) as _b·256+_cid, which
+    # collides (silently wrong scores) past 256 codewords per block.
+    if k > 256:
+        raise ValueError(f"pq_codebooks k={k} exceeds the ADC packing stride 256")
     v = _spread(
         vectors.select(
             F.col(id_col).alias("_id"),
@@ -1189,33 +1201,11 @@ def pq_codebooks(
     cents = vb.filter(F.col("_id") < k).select(
         "_b", F.col("_id").alias("_cid"), F.col("_be").alias("_ce")
     )
-    for _ in range(iters):
-        assigned = _assign_blocks(vb, cents)
-        comp = assigned.select("_b", "code", F.posexplode("_be").alias("_pos", "_c"))
-        means = (
-            comp.groupBy("_b", "code", "_pos")
-            .agg(
-                F.sum(F.round(F.col("_c") * scale, 0).cast("long")).alias("_s"),
-                F.count("*").alias("_n"),
-            )
-            .select(
-                "_b",
-                "code",
-                "_pos",
-                (
-                    F.col("_s").cast("double") / (F.lit(float(scale)) * F.col("_n"))
-                ).alias("_m"),
-            )
-        )
-        cents = (
-            means.groupBy("_b", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("_pos", "_m"))).alias("_pm"))
-            .select(
-                "_b",
-                F.col("code").alias("_cid"),
-                F.transform("_pm", lambda s: s["_m"]).alias("_ce"),
-            )
-        )
+    cents = _chain_rounds(
+        cents,
+        lambda c: _lloyd_means(_assign_blocks(vb, c), ["_b", "code"], "_be", scale),
+        iters,
+    )
     return cents.localCheckpoint()
 
 
@@ -1298,15 +1288,6 @@ def ann_topk_pq(
     """
     vectors = valid_vectors(vectors, vec_col)
     queries = valid_vectors(queries, vec_col)
-    # The ADC map key packs (_b, _cid) as _b·256+_cid, which collides
-    # (silently wrong scores) if the codebooks ever carry more than 256
-    # codewords per block — fail loudly if pq_codebooks' default k is
-    # raised past the packing stride.
-    import inspect
-
-    assert inspect.signature(pq_codebooks).parameters["k"].default <= 256, (
-        "ADC packing stride 256 requires pq_codebooks k <= 256"
-    )
     books = pq_codebooks(
         vectors, n_blocks, sub_dim, id_col=id_col, vec_col=vec_col,
         train_n=train_n,

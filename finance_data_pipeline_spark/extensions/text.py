@@ -210,7 +210,7 @@ def gopher_quality(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     # job on any single-token document.
     # token array let_-bound: the per-element element_at would
     # otherwise re-run the regex split twice per bigram (quadratic in
-    # doc length) — see dedup._let.
+    # doc length) — see functions.let_.
     bigrams = let_(
         toks,
         lambda tk: F.when(
@@ -547,7 +547,7 @@ def _bpe_learn(docs: DataFrame, n_merges: int, text_col: str = "text"):
     for rank in range(1, n_merges + 1):
         # symbol array let_-bound: element_at per pair would otherwise
         # re-run the regexp_extract_all twice per adjacent pair
-        # (quadratic in word length) — see dedup._let.
+        # (quadratic in word length) — see functions.let_.
         pair_arr = let_(
             F.expr(r"regexp_extract_all(s, '\\(([^)]*)\\)', 1)"),
             lambda sy: F.when(

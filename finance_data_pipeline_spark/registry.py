@@ -4283,6 +4283,34 @@ FROM nodes n LEFT JOIN (
   GROUP BY e.dst) s ON s.node = n.node"""
 
 
+def _trade_graph_edges(spark, sf_dir):
+    """Symmetrized supplier↔customer trade graph as (src, dst) longs:
+    the distinct lineitem⋈orders (supplier, customer) pairs in both
+    orientations, suppliers on even node ids (2·suppkey) and customers
+    on odd ones (2·custkey+1)."""
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    e0 = (
+        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .select(
+            (F.col("l_suppkey") * 2).alias("s"),
+            (F.col("o_custkey") * 2 + 1).alias("c"),
+        )
+        .distinct()
+    )
+    # Row-local symmetrization (explode of both orientations) — the
+    # former union of two e0 branches evaluated the distinct-join
+    # subtree twice past its reused exchange; identical row multiset.
+    return e0.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
+                F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
+            )
+        ).alias("_e")
+    ).select("_e.src", "_e.dst")
+
+
 @query(
     "supplier_customer_pagerank",
     f"""WITH e0 AS MATERIALIZED (SELECT DISTINCT l_suppkey * 2 AS s, o_custkey * 2 + 1 AS c
@@ -4314,28 +4342,7 @@ def q_supplier_customer_pagerank(spark, sf_dir):
     graph.pagerank."""
     from finance_data_pipeline_spark.extensions import graph
 
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("o_custkey") * 2 + 1).alias("c"),
-        )
-        .distinct()
-    )
-    # Row-local symmetrization (explode of both orientations) — the
-    # former union of two e0 branches evaluated the distinct-join
-    # subtree twice past its reused exchange; identical row multiset.
-    edges = e0.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
-    pr = graph.pagerank(edges, iters=5)
+    pr = graph.pagerank(_trade_graph_edges(spark, sf_dir), iters=5)
     # Tie-break on the raw node id (NOT entity_key: supplier 2k and
     # customer 2k+1 share an entity_key) so the top-20 SET matches the
     # oracle's ORDER BY r DESC, node cut exactly.
@@ -8927,34 +8934,16 @@ def q_personalized_pagerank(spark, sf_dir):
     proximity to them — the "customers most connected to these
     suppliers" expansion. Integer fixed-point, full 5-round SQL
     replay; zero-rank nodes (unreached under floor division) are
-    excluded on both sides. See graph.personalized_pagerank."""
+    excluded on both sides. See graph.pagerank."""
     from finance_data_pipeline_spark.extensions import graph
 
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e0 = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("o_custkey") * 2 + 1).alias("c"),
-        )
-        .distinct()
-    )
-    # Row-local symmetrization — see q_supplier_customer_pagerank.
-    edges = e0.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
+    edges = _trade_graph_edges(spark, sf_dir)
     seeds = (
         edges.select(F.col("src").alias("node"))
         .filter((F.col("node") % 2 == 0) & (F.expr("node div 2") <= 3))
         .distinct()
     )
-    pr = graph.personalized_pagerank(edges, seeds, iters=5)
+    pr = graph.pagerank(edges, iters=5, seeds=seeds)
     return (
         pr.filter(F.col("rank_scaled") > 0)
         .orderBy(F.desc("rank_scaled"), "node")

@@ -11,7 +11,7 @@ collisions, nulls, and boundary values no hand fixture covers.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -421,29 +421,47 @@ _edges_pr = st.lists(
 )
 
 
-@given(edges=_edges_pr)
+@given(
+    edges=_edges_pr,
+    iters=st.sampled_from([1, 5, 7, 13]),
+    seeds=st.one_of(st.none(), st.sets(st.integers(0, 8), max_size=3)),
+)
+@example(edges=[(0, 1), (1, 2), (2, 0), (2, 3)], iters=13, seeds=None)
+@example(edges=[(0, 1), (1, 0), (1, 2), (3, 1)], iters=7, seeds={1, 8})
 @settings(**SETTINGS)
-def test_pagerank_matches_integer_replay(spark, edges):
+def test_pagerank_matches_integer_replay(spark, edges, iters, seeds):
     """Pure-python integer replay of the exact update rule — any
-    deviation in Spark's aggregation/join plan shows up bit-for-bit."""
+    deviation in Spark's aggregation/join plan shows up bit-for-bit.
+    Iteration counts past 6 cross the lineage cut; a seed set replays
+    the personalized teleport (seeds outside the graph are ignored)."""
     from finance_data_pipeline_spark.extensions import graph
 
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.rank_scaled for r in graph.pagerank(df).collect()}
+    sd = None
+    if seeds is not None:
+        sd = spark.createDataFrame([(x,) for x in sorted(seeds)], "node long")
+    got = {
+        r.node: r.rank_scaled
+        for r in graph.pagerank(df, iters=iters, seeds=sd).collect()
+    }
 
     scale, d = 1_000_000_000, 85
     nodes = sorted({n for e in edges for n in e})
-    n = len(nodes)
+    tele = set(nodes) if seeds is None else seeds & set(nodes)
     deg = {}
     for s, _ in edges:
         deg[s] = deg.get(s, 0) + 1
+    if not tele:
+        assert got == {v: 0 for v in nodes}
+        return
+    n = len(tele)
     teleport = ((100 - d) * scale // 100) // n
-    r = {v: scale // n for v in nodes}
-    for _ in range(5):
+    r = {v: scale // n if v in tele else 0 for v in nodes}
+    for _ in range(iters):
         s = {v: 0 for v in nodes}
         for a, b in edges:
             s[b] += r[a] // deg[a]
-        r = {v: teleport + (d * s[v]) // 100 for v in nodes}
+        r = {v: (teleport if v in tele else 0) + (d * s[v]) // 100 for v in nodes}
     assert got == r
 
 

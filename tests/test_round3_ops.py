@@ -443,6 +443,14 @@ def test_bloom_flags_planted_contamination(spark):
     assert out[train_ids[1]].exact_hit == 0 and out[train_ids[1]].bloom_hit == 0
 
 
+def test_bloom_probe_rejects_bitmaps_past_exact_float_division(spark):
+    """The probe side's floor(pos / 63) is exact only below 2^53, so a
+    larger bitmap must raise — also under ``python -O``."""
+    dedup._bloom_wb(F.col("sh"), 1 << 52)
+    with pytest.raises(ValueError, match="exact float-div range"):
+        dedup._bloom_wb(F.col("sh"), (1 << 52) + 1)
+
+
 # --- label_outliers -------------------------------------------------------
 
 
@@ -609,6 +617,14 @@ def test_train_n_fails_fast_on_sparse_or_offset_ids(spark):
         similarity.kmeans_centroids(vecs, k=8, train_n=32)
     with _pt.raises(ValueError, match="dense 0-based ids"):
         similarity.pq_codebooks(vecs, n_blocks=2, sub_dim=8, train_n=32)
+
+
+def test_pq_codebooks_rejects_more_codewords_than_the_adc_stride(spark):
+    """ADC packs (block, codeword) as block·256+codeword; k > 256 would
+    collide keys, so it must raise — also under ``python -O``."""
+    vecs = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="ADC packing stride"):
+        similarity.pq_codebooks(vecs, n_blocks=1, sub_dim=2, k=257)
 
 
 def test_pq_adc_score_is_the_quantized_inner_product(spark):

@@ -498,7 +498,7 @@ def test_personalized_pagerank_concentrates_on_seed_neighborhood(spark):
         edges += [(200, leaf), (leaf, 200)]
     e = spark.createDataFrame(edges, "src long, dst long")
     seeds = spark.createDataFrame([(100,)], "node long")
-    out = {r.node: r.rank_scaled for r in graph.personalized_pagerank(e, seeds, iters=3).collect()}
+    out = {r.node: r.rank_scaled for r in graph.pagerank(e, iters=3, seeds=seeds).collect()}
     assert out[100] > 0 and out[1] > 0
     assert out[200] == 0 and out[11] == 0
 
@@ -508,7 +508,7 @@ def test_personalized_pagerank_empty_seed_set(spark):
 
     e = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
     seeds = spark.createDataFrame([(99,)], "node long")  # not in graph
-    out = graph.personalized_pagerank(e, seeds, iters=2).collect()
+    out = graph.pagerank(e, iters=2, seeds=seeds).collect()
     assert all(r.rank_scaled == 0 for r in out)
 
 

@@ -8,20 +8,37 @@ Usage:
 Writes plans/<round>/<query>_<tag>.txt with the formatted physical plan of
 the exact registry callable the bench times (bench OVERRIDES excluded —
 those time pre-shared intermediates; their registry plans are what the
-judge audits). Plans are captured pre-execution (AdaptiveSparkPlan
-isFinalPlan=false) — the static shape (Exchange count, join strategy,
-PushedFilters, codegen spans) is what the optimization evidence cites.
+judge audits). The plan is the final frame's, taken before that frame
+executes (AdaptiveSparkPlan isFinalPlan=false) — the static shape
+(Exchange count, join strategy, PushedFilters, codegen spans) is what the
+optimization evidence cites. Building a query is not job-free: operators
+that materialize intermediates (pagerank's edge list and degree join,
+checkpointed trainers) run those jobs while the callable builds the
+frame, and the captured plan reads them back as ``Scan ExistingRDD``.
+
+Expression ids (``#<n>``), exchange ``plan_id=<n>`` and RDD ``[<n>]`` ids
+are stripped: they count up per session, so without the strip every
+capture differs from every other. A before/after diff of two captures is
+then empty exactly when the plans are the same.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_SESSION_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+(?=\])")
+
+
+def normalize(plan: str) -> str:
+    """Drop the per-session counters from a formatted plan."""
+    return _SESSION_IDS.sub(lambda m: "#" if m.group().startswith("#") else "", plan)
 
 
 def main() -> None:
@@ -48,7 +65,7 @@ def main() -> None:
         )
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
-            fh.write(txt)
+            fh.write(normalize(txt))
         print(f"{name}: wrote {path}")
     spark.stop()
 
