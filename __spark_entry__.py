@@ -48,175 +48,49 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Driver-check priority: the driver's correctness pass covers a window
-# of queries in dict order (each round records exactly the first 50).
-# _ordered() rotates AUTOMATICALLY: queries with a recorded full-green
-# driver row (CORRECTNESS_r*.json) move behind the never-green ones,
-# so every round's window is spent on rows that can still change
-# state — no manual reordering between rounds. _PRIORITY fixes the
-# relative order within each class; rows-only queries (err:
-# "no_oracle" by design) sit in _TAIL so they never burn a slot.
-_PRIORITY = [
-    # --- never driver-checked, oracle-backed: these 25 fill the window's
-    # front so round 3 finishes 122/122 oracle-backed driver-green
-    "ema_macd", "streaming_upsert_stocks",
-    "doc_chunks", "packed_sequences", "tfidf_top_terms",
-    "heavy_hitters", "rolling_corr_30", "containment_pairs",
-    "streaming_enriched_events", "incremental_daily_agg",
-    "dup_degree_stats", "bpe_merge_candidates", "streaming_interval_join",
-    "price_anomalies", "pii_scrub", "dup_clusters_star",
-    "max_drawdown", "event_type_affinity",
-    "part_value_concentration", "priority_line_counts",
-    "customer_order_distribution", "top_supplier_revenue",
-    "small_qty_part_revenue", "sole_returning_supplier",
-    "full_indicator_sweep",
-    # --- new round-3 operators (full oracles), first driver check
-    "semantic_dedup", "dedup_keep_best",
-    "repeated_ngram_spans", "contamination_overlap",
-    "kmeans_clusters", "lang_confusion", "token_budget_sample",
-    "unigram_logprob", "salted_hot_join", "ccnet_buckets",
-    "ann_topk_ivf_exact", "semantic_dedup_kmeans", "text_topk_jaccard",
-    "streaming_doc_quality", "media_exact_dedup", "remove_dup_spans",
-    "events_variant", "indicator_unpivot",
-    "line_dedup", "bloom_decontaminate",
-    "embedding_outliers", "profile_table", "streaming_neardup_gate",
-    "ann_topk_pq", "supplier_customer_pagerank",
-    # positions 51+: oracle-backed but past the 50-slot window — they
-    # go green locally now and take a driver slot next round
-    "quality_weighted_sample", "hashed_tf_features", "bpe_merges",
-    "ann_topk_pq_rerank",
-    "winnowing_fingerprints", "winnowing_shared_spans",
-    "temperature_mix", "mixture_epoch_plan",
-    "soft_dedup_weights", "source_ngram_overlap",
-    "bm25_topk", "quality_percentile_by_lang", "embedding_standardize",
-    "orders_snapshot_diff", "lineitem_key_skew", "streaming_running_totals",
-    "bpe_encode", "corpus_grouping_sets", "curated_mix", "dup_triangles",
-    "hll_user_estimate", "cms_term_counts", "dup_reach_sql",
-    "event_sequence_match", "ab_value_ttest", "value_quantile_bins",
-    "source_lang_entropy", "gram_zipf_fit", "media_phash_pairs",
-    "streaming_session_windows", "streaming_interval_join_left",
-    "streaming_update_totals", "streaming_complete_totals",
-    "custom_source_ohlcv", "lsh_recall_report", "lang_salting_plan",
-    "observed_quality_metrics",
-    # --- round-4 additions: behind every pending row above, so they
-    # fill this round's leftover window slots without displacing one
-    "asof_join_events_bars_forward", "user_event_bursts",
-    "decontaminate_spans", "vocab_coverage", "dup_rate_by_source",
-    "neardup_score_hist", "custom_source_ohlcv_stream",
-    "hll_users_by_event_type", "media_audio_energy",
-    "kmeans_cluster_quality",
-    # --- round-5 addition at WINDOW PRIORITY (VERDICT r4 item 6+8): the
-    # one net-new query this round, driver-checked in the same round
-    "lsh_recall_report_fast",
-    # --- beyond this round's 50-slot window; first checked next round
-    "knn_label_vote", "user_paths", "value_winsorized_stats",
-    "streaming_decontaminated_intake", "dsir_selected_corpus",
-    "bigram_logprob", "source_unigram_kl", "embedding_top_pc",
-    "embedding_pc_projection", "streaming_asof_enrichment",
-    "asof_join_events_bars_nearest", "quality_vs_dup_rate",
-    "pack_shard_manifest", "daily_volume_anomalies",
-    "streaming_late_data_policy",
-    "split_leakage_check", "canonical_dedup_stats", "embedding_sq8_error",
-    "event_transition_matrix", "dau_wau_stickiness", "dup_kcore",
-    "epoch_shuffle", "contrastive_pairs",
-    "calendar_fill", "ohlc_resample_weekly", "k_anonymity_audit",
-    "zorder_skip_stats", "join_size_estimate",
-    "label_prop_communities", "rolling_beta_30",
-    "quality_ensemble_rank", "leakage_safe_split",
-    "ewma_volatility", "growth_accounting", "rfm_scores", "benford_audit",
-    "embedding_prefix_energy", "drawdown_duration", "fd_audit",
-    "streaming_dedup_watermark",
-    "user_value_skyline", "order_reconciliation",
-    "personalized_pagerank", "effective_token_mass",
-    "per_source_sample_k", "decayed_engagement", "last_touch_attribution",
-    "fk_orphan_audit", "global_token_rank", "robust_return_anomalies",
-    "media_scene_cuts", "time_travel_read", "store_change_feed",
-    "capm_regression", "streaming_versioned_commits",
-    "value_hour_independence", "token_drivers_ols", "udtf_sentences",
-    "value_gini_by_type", "holt_linear", "sma_crossover_backtest",
-    "corpus_datacard",
-    # --- round-4 additions (behind every pending row above)
-    "atr_14", "stochastic_14_3", "williams_r_14", "obv", "mfi_14",
-    "cci_20", "donchian_20", "keltner_20", "roc_10",
-    "candlestick_patterns",
-    "char_entropy", "distinct_ngram_frac", "doc_novelty",
-    "streaming_ohlc_bars",
-    "ichimoku", "pairs_spread_zscore", "volume_profile",
-    "hourly_seasonality", "variance_ratio", "ks_value_drift",
-    "psi_value_drift", "mann_whitney_u", "tokenizer_fertility",
-    "dedup_stage_funnel", "streaming_topk_hitters",
-    "media_silence_runs", "cooccurrence_pmi", "mutual_info_lang_source",
-    "robust_quality_by_lang", "bar_gap_report",
-    "volume_weighted_median", "part_name_matching",
-    "liquidity_measures", "fama_macbeth", "calendar_interpolate",
-    "adx_14", "aroon_25", "cmf_20", "range_volatility",
-    "risk_adjusted_perf", "acf_ljung_box", "cusum_break",
-    "theil_sen_trend", "engle_granger_coint",
-    "time_decay_attribution", "hour_seasonal_anomalies",
-    "trigram_backoff_logprob",
-    "kama_10", "l_moments_by_type", "session_duration_stats",
-    "mmr_diverse_topk", "spearman_corr_pairs",
-    "var_cvar_95", "return_moments", "up_down_capture",
-    "omega_tail_ratio", "win_loss_streaks",
-    "pivot_points", "force_index_eom", "momentum_xsec_rank",
-    "dema_tema_20",
-    "flesch_readability", "ttr_yule_k", "js_divergence_sources",
-    "hurst_rs", "kendall_tau_pairs", "heikin_ashi",
-    "black_scholes_grid", "min_var_pairs",
-    "transition_stationary_dist", "type_burstiness", "user_value_deciles",
-    "garch_11_vol", "nb_lang_classifier", "bm25_context_pack",
-    "order_to_ship_lag", "cohort_revenue_matrix",
-    "drawdown_episodes", "link_pred_common_neighbors",
-    "var_backtest_kupiec", "incremental_dedup_delta",
-    "conditional_betas", "bs_greeks",
-    "ks_normality", "spectral_power_grid",
-    "dow_effect", "runs_test", "quality_score_auc",
-    "es_backtest_z", "information_ratio", "lang_id_margin",
-]
-
-# Rows-only by design (no SQL oracle; the driver records err:"no_oracle"
-# regardless of position) — keep them behind every oracle-backed query.
-_TAIL = [
-    "approx_user_counts", "approx_value_percentiles",
-    "ann_topk_ivf", "cosine_dup_pairs_blocked",
-]
+# Driver-check order: the driver's correctness pass covers a window of
+# queries in dict order (each round records the first 50). Oracle-backed
+# queries go first, least recently confirmed first: by the latest round
+# whose CORRECTNESS_rNN.json (beside this file) recorded hash_match true,
+# 0 if none did. So each window goes to the queries checked longest ago
+# and every oracle comes round again. Rows-only queries (no oracle; the
+# driver records err "no_oracle") go last. Ties keep registry order.
 
 
-def _driver_green() -> set:
-    """Query names with a full-green driver row in any recorded round
-    (CORRECTNESS_r*.json beside this file). Lets the ordering rotate
-    AUTOMATICALLY: once the driver records a hash-match, that query
-    yields its window slot to still-unchecked ones next round — no
-    manual _PRIORITY edit required between rounds."""
-    import glob
+def _last_green() -> dict[str, int]:
+    """Query name -> latest round N whose CORRECTNESS_rNN.json recorded
+    a hash match for it (queries never matched are absent)."""
     import json
     import os
+    import re
 
-    green: set = set()
     here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
+    last: dict[str, int] = {}
+    for fname in os.listdir(here):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if not m:
+            continue
         try:
-            with open(path) as f:
+            with open(os.path.join(here, fname)) as f:
                 rows = json.load(f)
-        except Exception:
+        except (OSError, ValueError):
             continue
         for name, row in rows.items():
             if isinstance(row, dict) and row.get("hash_match") is True:
-                green.add(name)
-    return green
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
 
 
 def _ordered(mapping: dict) -> dict:
-    green = _driver_green()
-    base = [n for n in _PRIORITY if n in mapping]
-    base += [n for n in mapping if n not in base and n not in _TAIL]
-    # never-green oracle-backed queries first (window slots go to rows
-    # that can still change state), then the confirmed-green ones for
-    # re-confirmation, then the rows-only tail.
-    out = {n: mapping[n] for n in base if n not in green}
-    out.update({n: mapping[n] for n in base if n in green})
-    out.update({n: mapping[n] for n in _TAIL if n in mapping})
-    return out
+    from finance_data_pipeline_spark.registry import ORACLES
+
+    last = _last_green()
+    return dict(
+        sorted(
+            mapping.items(),
+            key=lambda kv: (kv[0] not in ORACLES, last.get(kv[0], 0)),
+        )
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

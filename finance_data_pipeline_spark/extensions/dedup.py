@@ -352,8 +352,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     propagation: every node repeatedly adopts the smallest label among
     itself and its neighbors until fixpoint. Converges in O(diameter)
     rounds — near-dup clusters are shallow (dense cliques chained by a
-    few bridges), so a handful of rounds suffice; ``max_iter`` bounds
-    adversarial chains.
+    few bridges), so a handful of rounds suffice. A graph whose labels
+    have not settled after ``max_iter`` rounds (a chain longer than
+    that) is handed to connected_components_star, whose O(log n)
+    rounds converge on it, instead of returning unsettled labels.
 
     Each round is two shuffles (join + min-aggregate) plus a scalar
     convergence check; ``localCheckpoint`` cuts the iterative lineage so
@@ -403,6 +405,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         labels = new_labels
         if changed == 0:
             break
+    else:
+        return connected_components_star(pairs)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

@@ -238,6 +238,23 @@ def _train_ivf_centroids(
     return cents
 
 
+def _normed(series: pd.Series) -> np.ndarray:
+    m = np.stack(series.to_numpy()).astype("float64")
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+
+def _cell_of_udf(bc):
+    """Pandas UDF mapping a vector column to the index of its nearest
+    centroid (max cosine) in the broadcast (n_cells x dim) matrix
+    ``bc`` — one numpy GEMM argmax per Arrow batch."""
+
+    @F.pandas_udf("int")
+    def cell_of(vs: pd.Series) -> pd.Series:
+        return pd.Series(np.argmax(_normed(vs) @ bc.value.T, axis=1).astype("int32"))
+
+    return cell_of
+
+
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -275,14 +292,6 @@ def ivf_topk(
     )
     bc = vectors.sparkSession.sparkContext.broadcast(cents)
 
-    def _normed(series: pd.Series) -> np.ndarray:
-        m = np.stack(series.to_numpy()).astype("float64")
-        return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-
-    @F.pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        return pd.Series(np.argmax(_normed(vs) @ bc.value.T, axis=1).astype("int32"))
-
     @F.pandas_udf("array<int>")
     def probe_cells(vs: pd.Series) -> pd.Series:
         sims = _normed(vs) @ bc.value.T
@@ -292,7 +301,7 @@ def ivf_topk(
     v = _spread(vectors).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("neighbor_vec"),
-        cell_of(F.col(vec_col)).alias("cell"),
+        _cell_of_udf(bc)(F.col(vec_col)).alias("cell"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -1639,24 +1648,15 @@ def build_ivf_index(
     assignment is the same broadcast numpy-GEMM Arrow pass as ivf_topk
     (no shuffle beyond the partitioned write's file routing).
     """
-    import pandas as pd
-
     cents = _train_ivf_centroids(
         vectors, n_cells, sample_size, train_iters, seed, id_col, vec_col
     )
     bc = vectors.sparkSession.sparkContext.broadcast(cents)
-
-    @F.pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy()).astype("float64")
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ bc.value.T, axis=1).astype("int32"))
-
     (
         vectors.select(
             id_col,
             F.col(vec_col).cast("array<double>").alias(vec_col),
-            cell_of(F.col(vec_col).cast("array<double>")).alias("cell"),
+            _cell_of_udf(bc)(F.col(vec_col).cast("array<double>")).alias("cell"),
         )
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -1730,8 +1730,6 @@ def add_to_ivf_index(
     does: rebuild with build_ivf_index when recall degrades, not by
     mutating cells in place.
     """
-    import pandas as pd
-
     spark = new_vectors.sparkSession
     cents_rows = sorted(
         spark.read.parquet(f"{index_path}/centroids").collect(),
@@ -1739,18 +1737,11 @@ def add_to_ivf_index(
     )
     cents = np.stack([np.asarray(r.centroid, dtype="float64") for r in cents_rows])
     bc = spark.sparkContext.broadcast(cents)
-
-    @F.pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy()).astype("float64")
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ bc.value.T, axis=1).astype("int32"))
-
     (
         new_vectors.select(
             id_col,
             F.col(vec_col).cast("array<double>").alias(vec_col),
-            cell_of(F.col(vec_col).cast("array<double>")).alias("cell"),
+            _cell_of_udf(bc)(F.col(vec_col).cast("array<double>")).alias("cell"),
         )
         .write.mode("append")
         .partitionBy("cell")

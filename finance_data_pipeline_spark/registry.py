@@ -4693,10 +4693,10 @@ _KM_UPDATE = """SELECT cid, list(m ORDER BY pos) AS ce FROM (
   CROSS JOIN (SELECT unnest(range(1, 65)) AS pos) p
   GROUP BY a.cid, p.pos) GROUP BY cid"""
 
-
-@query(
-    "kmeans_clusters",
-    f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
+# Two fixed-point Lloyd rounds from the 8 lowest-id vectors, then the
+# final scoring (s3) — the SQL twin of similarity.kmeans_centroids(k=8,
+# iters=2), shared by every oracle built on that clustering.
+_KM_LADDER = f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
   WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),
 c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
 s1 AS ({_KM_SCORE.format(cents="c0")}),
@@ -4705,7 +4705,12 @@ c1 AS ({_KM_UPDATE.format(assign="a1")}),
 s2 AS ({_KM_SCORE.format(cents="c1")}),
 a2 AS ({_KM_ASSIGN.format(scored="s2")}),
 c2 AS ({_KM_UPDATE.format(assign="a2")}),
-s3 AS ({_KM_SCORE.format(cents="c2")})
+s3 AS ({_KM_SCORE.format(cents="c2")})"""
+
+
+@query(
+    "kmeans_clusters",
+    f"""{_KM_LADDER}
 SELECT vec_id, cid AS cluster_id FROM ({_KM_ASSIGN.format(scored="s3")})""",
 )
 def q_kmeans_clusters(spark, sf_dir):
@@ -4722,16 +4727,7 @@ def q_kmeans_clusters(spark, sf_dir):
 
 @query(
     "ann_topk_ivf_exact",
-    f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-  WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),
-c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-s1 AS ({_KM_SCORE.format(cents="c0")}),
-a1 AS ({_KM_ASSIGN.format(scored="s1")}),
-c1 AS ({_KM_UPDATE.format(assign="a1")}),
-s2 AS ({_KM_SCORE.format(cents="c1")}),
-a2 AS ({_KM_ASSIGN.format(scored="s2")}),
-c2 AS ({_KM_UPDATE.format(assign="a2")}),
-s3 AS ({_KM_SCORE.format(cents="c2")}),
+    f"""{_KM_LADDER},
 cells AS ({_KM_ASSIGN.format(scored="s3")}),
 probes AS (SELECT query_id, cid FROM (
   SELECT query_id, cid,
@@ -4772,16 +4768,7 @@ def q_ann_ivf_exact(spark, sf_dir):
 
 @query(
     "semantic_dedup_kmeans",
-    f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-  WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),
-c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-s1 AS ({_KM_SCORE.format(cents="c0")}),
-a1 AS ({_KM_ASSIGN.format(scored="s1")}),
-c1 AS ({_KM_UPDATE.format(assign="a1")}),
-s2 AS ({_KM_SCORE.format(cents="c1")}),
-a2 AS ({_KM_ASSIGN.format(scored="s2")}),
-c2 AS ({_KM_UPDATE.format(assign="a2")}),
-s3 AS ({_KM_SCORE.format(cents="c2")}),
+    f"""{_KM_LADDER},
 assigned AS ({_KM_ASSIGN.format(scored="s3")}),
 dropped AS (
   SELECT DISTINCT b.vec_id
@@ -6893,16 +6880,7 @@ def q_media_audio_energy(spark, sf_dir):
 
 @query(
     "kmeans_cluster_quality",
-    f"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-  WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x <> 0)) > 0),
-c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8),
-s1 AS ({_KM_SCORE.format(cents="c0")}),
-a1 AS ({_KM_ASSIGN.format(scored="s1")}),
-c1 AS ({_KM_UPDATE.format(assign="a1")}),
-s2 AS ({_KM_SCORE.format(cents="c1")}),
-a2 AS ({_KM_ASSIGN.format(scored="s2")}),
-c2 AS ({_KM_UPDATE.format(assign="a2")}),
-s3 AS ({_KM_SCORE.format(cents="c2")}),
+    f"""{_KM_LADDER},
 asg AS ({_KM_ASSIGN.format(scored="s3")}),
 own AS (SELECT vec_id, max(sim) AS own_sim FROM s3 GROUP BY vec_id),
 oth AS (SELECT s.vec_id, max(s.sim) AS other_sim

@@ -1,119 +1,11 @@
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF_SMALL = "/root/testdata/sf0.001"
-SF_MED = "/root/testdata/sf0.01"
-
-# ---------------------------------------------------------------------------
-# Suite wall-time control (VERDICT r09 next-round #1).
-#
-# The FULL suite (779 tests, ~350 of them full-oracle parity sweeps) runs
-# ~35 min under co-tenant load — past the driver's verify window, which
-# truncated the r09 run at ~92% with zero failures. The default run keeps
-# every assertion CLASS but samples the exhaustive sweeps:
-#
-#   * the per-query oracle-parity sweep runs a deterministic ~1/8 sample
-#     (md5(name) rule) plus an always-run set covering recently-restructured
-#     queries — the same rotating-sample idea the driver itself uses for its
-#     50-query correctness check;
-#   * a short curated list of >15 s integration tests is skipped.
-#
-# EVERY skipped test remains reachable: SPARK_GRAFT_SLOW_TESTS=1 runs the
-# complete suite exactly as before (that is what the builder runs before
-# ending a round; tools/mini_driver.py --window 400 additionally sweeps
-# every oracle-backed query with the driver's own comparator).
-# ---------------------------------------------------------------------------
-
-RUN_SLOW = os.environ.get("SPARK_GRAFT_SLOW_TESTS", "") == "1"
-
-# Queries whose parity test ALWAYS runs (restructured in recent rounds —
-# the highest-value regression guards).
-_PARITY_ALWAYS = {
-    "ann_topk_ivf_exact",
-    "ann_topk_pq",
-    "ann_topk_pq_rerank",
-    "bm25_topk",
-    "bm25_context_pack",
-    "bpe_merges",
-    "bpe_encode",
-    "bloom_decontaminate",
-    "decontaminate_spans",
-    "dedup_keep_best",
-    "kmeans_clusters",
-    "kmeans_cluster_quality",
-    "label_prop_communities",
-    "line_dedup",
-    "near_dup_pairs",
-    "ngram_sim_join",
-    "personalized_pagerank",
-    "pricing_summary",
-    "remove_dup_spans",
-    "semantic_dedup",
-    "semantic_dedup_kmeans",
-    "source_ngram_overlap",
-    "string_sim_join",
-    "supplier_customer_pagerank",
-    "training_corpus",
-    "winnowing_shared_spans",
-}
-
-# Heavy standalone tests skipped by default (each >15 s; all still run
-# under SPARK_GRAFT_SLOW_TESTS=1). The plan-shape invariant the first one
-# asserts is additionally audited by tools/plan_report.py → PLANS.md on
-# every round's final code.
-_SLOW_TESTS = {
-    "test_no_query_uses_rowwise_python_or_cartesian_product",  # 268 s: explains all 352 plans
-    "test_no_oracle_is_empty",  # 100 s of setup: evaluates every oracle at 2 SFs
-    "test_neardup_gate_admits_novel_blocks_dups_and_indexes_admissions",  # 36 s
-    "test_neardup_gate_survives_checkpoint_restart",  # 23 s
-    "test_leakage_safe_split_keeps_clusters_together",  # 24 s
-    "test_session4_operators_handle_empty_inputs",  # 24 s
-    "test_star_cc_equals_label_propagation",  # 22 s
-    "test_decontaminate_spans_idempotent_and_bounded",  # 17 s
-    "test_stationary_shares_sum_to_one_and_are_positive",  # 16 s (+7 s setup)
-    "test_stateful_running_totals_accumulates_across_batches",  # 16 s
-    "test_quality_pipeline_survives_degenerate_docs",  # 16 s
-    "test_stateful_continuity_under_rocksdb_state_store",  # 15 s
-}
-
-
-def _parity_sampled(qname: str) -> bool:
-    """Deterministic ~1/8 sample of the oracle-parity sweep."""
-    if qname in _PARITY_ALWAYS:
-        return True
-    return hashlib.md5(qname.encode()).hexdigest()[0] in ("0", "1")
-
-
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "slow: heavy test skipped by default; set SPARK_GRAFT_SLOW_TESTS=1 to run",
-    )
-
-
-def pytest_collection_modifyitems(config, items):
-    if RUN_SLOW:
-        return
-    skip = pytest.mark.skip(
-        reason="slow: set SPARK_GRAFT_SLOW_TESTS=1 for the full suite"
-    )
-    for item in items:
-        name = getattr(item, "originalname", None) or item.name
-        if "slow" in item.keywords or name in _SLOW_TESTS:
-            item.add_marker(skip)
-            continue
-        if name == "test_query_matches_oracle" and item.callspec.params.get(
-            "name"
-        ) is not None:
-            if not _parity_sampled(item.callspec.params["name"]):
-                item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")

@@ -113,18 +113,6 @@ def test_query_matches_oracle(spark, name):
     assert not mismatches, f"{name}: value mismatches (col,row,spark,oracle): {mismatches}"
 
 
-def test_rows_only_queries_run(spark):
-    """Queries without oracle entries must still execute and return a
-    stable schema (the driver's weaker check)."""
-    from finance_data_pipeline_spark.registry import ORACLES, QUERIES
-
-    for name in sorted(set(QUERIES) - set(ORACLES)):
-        df = QUERIES[name](spark, SF_DIR)
-        n = df.count()
-        assert n >= 0, name
-        assert df.columns, name
-
-
 def test_entry_smoke(spark):
     import __spark_entry__ as entrymod
 
@@ -143,11 +131,12 @@ def _rows_only_names():
 @pytest.mark.parametrize("name", _rows_only_names())
 def test_rows_only_query_runs_with_stable_schema(spark, name):
     """Queries without a SQL oracle still face the driver's rows-only
-    check: they must execute, return a deterministic schema, and be
-    re-runnable (same row count twice)."""
+    check: they must execute, return a non-empty deterministic schema,
+    and be re-runnable (same row count twice)."""
     from finance_data_pipeline_spark.registry import QUERIES
 
     df = QUERIES[name](spark, SF_DIR)
+    assert df.columns, name
     schema1 = df.schema.simpleString()
     n1 = df.count()
     df2 = QUERIES[name](spark, SF_DIR)

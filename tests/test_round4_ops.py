@@ -280,24 +280,33 @@ def test_audio_frame_energy_only_audio_rows(spark):
 # --- driver-contract hygiene ----------------------------------------------
 
 
-def test_priority_lists_reference_real_queries_without_duplicates():
-    """A typo in _PRIORITY/_TAIL silently drops a query from its
-    intended window position — assert every listed name exists in the
-    registry and nothing is listed twice, and that rows-only queries
-    are exactly the _TAIL set (an oracle-backed query in _TAIL would
-    never earn a driver slot; a rows-only query outside it burns one)."""
+def test_driver_order_puts_least_recently_green_oracles_first():
+    """queries()/oracle_sql() hand the driver every registered name
+    once: oracle-backed queries ordered by the latest round that
+    hash-matched them (oldest first, registry order on ties), rows-only
+    queries last — so the driver's 50-slot window goes to the queries
+    confirmed longest ago, none of those the last recorded round checked."""
+    import json
+    import os
+
     import __spark_entry__ as entrymod
     from finance_data_pipeline_spark.registry import ORACLES, QUERIES
 
-    listed = entrymod._PRIORITY + entrymod._TAIL
-    unknown = [n for n in listed if n not in QUERIES]
-    assert not unknown, f"listed but not registered: {unknown}"
-    dupes = [n for n in set(listed) if listed.count(n) > 1]
-    assert not dupes, f"duplicated entries: {dupes}"
-    rows_only = set(QUERIES) - set(ORACLES)
-    assert set(entrymod._TAIL) == rows_only, (
-        set(entrymod._TAIL) ^ rows_only
-    )
+    q, o = list(entrymod.queries()), list(entrymod.oracle_sql())
+    assert sorted(q) == sorted(QUERIES)
+    assert sorted(o) == sorted(ORACLES)
+    assert [n in ORACLES for n in q] == sorted((n in ORACLES for n in q), reverse=True)
+    assert q[: len(o)] == o
+
+    root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    with open(os.path.join(root, "CORRECTNESS_r10.json")) as f:
+        checked_r10 = set(json.load(f))
+    assert not set(o[:50]) & checked_r10, set(o[:50]) & checked_r10
+
+    registry_pos = {n: i for i, n in enumerate(ORACLES)}
+    last = entrymod._last_green()
+    keys = [(last.get(n, 0), registry_pos[n]) for n in o]
+    assert keys == sorted(keys)
 
 
 # --- scorer semantics -----------------------------------------------------

@@ -217,6 +217,20 @@ def test_connected_components_long_chain_converges(spark):
     assert len(out) == 13
 
 
+def test_connected_components_chain_past_iteration_cap_is_one_cluster(spark):
+    """A 41-node path (diameter 40) cannot settle in max_iter=25
+    min-label rounds; the result must still be the one component,
+    labelled with its min id, not the partial labels of round 25."""
+    from finance_data_pipeline_spark.extensions.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
+    )
+    out = connected_components(pairs).collect()
+    assert {r.cluster_id for r in out} == {0}
+    assert sorted(r.doc_id for r in out) == list(range(41))
+
+
 def test_ivf_deterministic_rescores_exactly_and_recalls(spark, vectors):
     """Every IVF-exact hit must carry the identical cosine brute force
     computes for that pair (the quantizer prunes, never rescores), and

@@ -1,7 +1,6 @@
 #!/usr/bin/env python
 """Emit the registry coverage map: every registered query × (oracle
-kind, latest driver round checked, green) from CORRECTNESS_r*.json —
-so each round's _PRIORITY window choice is mechanical.
+kind, latest driver round checked, green) from CORRECTNESS_r*.json.
 
 Usage:  python tools/coverage_map.py            # markdown to stdout
         python tools/coverage_map.py COVERAGE.md  # write a file

@@ -97,9 +97,9 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01"))
     ap.add_argument("--window", type=int, default=None,
-                    help="check the first N of the driver's rotated order")
+                    help="check the first N of the driver's order")
     ap.add_argument("--never-green", action="store_true",
-                    help="check every oracle-backed query without a green driver row")
+                    help="check every oracle-backed query no CORRECTNESS_r*.json hash-matched")
     ap.add_argument("--skip", type=int, default=0,
                     help="skip the first N of the selected set")
     ap.add_argument("names", nargs="*")
@@ -116,8 +116,8 @@ def main():
     if args.names:
         names = args.names
     elif args.never_green:
-        green = entrymod._driver_green()
-        names = [n for n in ordered if n not in green]
+        last_green = entrymod._last_green()
+        names = [n for n in ordered if n not in last_green]
     else:
         names = ordered[: (args.window or 50)]
     names = names[args.skip:]
