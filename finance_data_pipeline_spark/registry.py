@@ -23,6 +23,11 @@ Parity rules (SURVEY.md §7.4 + driver contract):
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -75,6 +80,11 @@ BARS = fixtures.BARS_HOURLY_CTE
 _W_DATE = "PARTITION BY symbol ORDER BY date"
 _W_BAR = "PARTITION BY symbol ORDER BY bar_ts"
 
+# Per-symbol simple daily return; the first day's ret is NULL.
+_RET_CTE = f"""r AS (SELECT symbol, date,
+        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
+      FROM stocks)"""
+
 
 def _stocks(spark, sf_dir):
     return fixtures.stocks(spark, sf_dir)
@@ -86,6 +96,97 @@ def _bars(spark, sf_dir):
 
 def _date(s: str):
     return F.lit(s).cast("date")
+
+
+def _events_ts(spark, sf_dir):
+    """The events table with ``ts`` as a session-zone TIMESTAMP, the
+    type ``streaming.EVENTS_SCHEMA`` streams it as."""
+    return table(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
+
+def _returns(spark, sf_dir):
+    """Per-symbol simple daily returns ``(symbol, date, ret)``, each
+    symbol's first day dropped; the DataFrame twin of ``_RET_CTE``."""
+    w = Window.partitionBy("symbol").orderBy("date")
+    return (
+        _stocks(spark, sf_dir)
+        .select(
+            "symbol", "date",
+            (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
+        )
+        .filter(F.col("ret").isNotNull())
+    )
+
+
+# --- streaming: stage frames, drain queries --------------------------------
+
+_STREAM_TIMEOUT_S = 300
+
+
+def _staged_stream(spark, frames):
+    """Stage each frame as one parquet file in a fresh temp dir and
+    stream the dir back one file per trigger. File mtimes are pinned in
+    list order, so the micro-batches are the frames, in list order:
+    batch boundaries are deterministic, which makes stateful results
+    SQL-replayable."""
+    staged = tempfile.mkdtemp(prefix="fdps_stage_")
+    seen: set[str] = set()
+    for i, frame in enumerate(frames, 1):
+        frame.coalesce(1).write.mode("append").parquet(staged)
+        new = {f for f in os.listdir(staged) if not f.startswith(("_", "."))} - seen
+        for f in new:
+            os.utime(os.path.join(staged, f), (i * 1_000_000_000,) * 2)
+        seen |= new
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(staged)
+    )
+
+
+def _wait(q) -> None:
+    """Block until the availableNow query ``q`` has drained its input,
+    then delete the ``fdps_*`` temp dirs its file sources read (named in
+    its last progress report, so a query that ends before its first
+    report leaves them). A query still running after
+    ``_STREAM_TIMEOUT_S`` is stopped and raises, instead of leaving a
+    partial sink behind."""
+    try:
+        if not q.awaitTermination(_STREAM_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"stream {q.name or q.id} did not drain in {_STREAM_TIMEOUT_S} s"
+            )
+    finally:
+        tmp = tempfile.gettempdir()
+        for src in q.lastProgress.sources if q.lastProgress else ():
+            m = re.fullmatch(r"FileStreamSource\[file:(.*)\]", src.description)
+            top = os.path.relpath(m[1], tmp).split(os.sep)[0] if m else ""
+            if top.startswith("fdps_"):
+                shutil.rmtree(os.path.join(tmp, top), ignore_errors=True)
+
+
+def _drain(sdf, mode):
+    """Run ``sdf`` under availableNow into a memory table and return the
+    table. Once the stream has terminated its checkpoint goes too, with
+    the staged input: the memory sink holds the rows on the driver."""
+    name = f"fdps_{uuid.uuid4().hex[:8]}"
+    ckpt = tempfile.mkdtemp(prefix="fdps_ckpt_")
+    q = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        _wait(q)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return sdf.sparkSession.table(name)
 
 
 def _micro_avg_sql(s: str, n: str, scale: int = 1_000_000) -> str:
@@ -2534,28 +2635,10 @@ def q_streaming_tumbling_daily(spark, sf_dir):
     query (file source → watermark → tumbling window → memory sink,
     availableNow trigger) — stream/batch equivalence demonstrated
     against the identical SQL oracle. §2.10."""
-    import tempfile
-    import uuid
+    from finance_data_pipeline_spark.streaming import streaming_daily_aggregate
 
-    from finance_data_pipeline_spark.streaming import (
-        stream_events,
-        streaming_daily_aggregate,
-    )
-
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
-    table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
-    name = f"fdps_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_daily_aggregate(stream_events(spark, staged))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    sdf = _staged_stream(spark, [_events_ts(spark, sf_dir)])
+    return _drain(streaming_daily_aggregate(sdf), "complete")
 
 
 @query(
@@ -2570,15 +2653,10 @@ def q_streaming_enriched(spark, sf_dir):
     joins the static nation dimension per micro-batch, then aggregates
     per dimension attribute — the streaming analogue of every J1
     dimension join, checked against the identical batch SQL."""
-    import tempfile
-    import uuid
+    from finance_data_pipeline_spark.streaming import enrich_stream
 
-    from finance_data_pipeline_spark.streaming import enrich_stream, stream_events
-
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
-    table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
     dim = table(spark, sf_dir, "nation")
-    stream = stream_events(spark, staged).withColumn(
+    stream = _staged_stream(spark, [_events_ts(spark, sf_dir)]).withColumn(
         "n_nationkey", (F.col("user_id") % 25)
     )
     enriched = enrich_stream(stream, dim, "n_nationkey")
@@ -2586,17 +2664,7 @@ def q_streaming_enriched(spark, sf_dir):
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
     )
-    name = f"fdps_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _drain(agg, "complete")
 
 
 @query(
@@ -2613,21 +2681,15 @@ def q_streaming_interval_join(spark, sf_dir):
     same-user purchases within the next hour, both sides watermarked so
     join state stays bounded — checked against the identical batch
     interval-join SQL."""
-    import tempfile
-    import uuid
+    from finance_data_pipeline_spark.streaming import interval_join_streams
 
-    from finance_data_pipeline_spark.streaming import interval_join_streams, stream_events
-
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
-    table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
+    sdf = _staged_stream(spark, [_events_ts(spark, sf_dir)])
     clicks = (
-        stream_events(spark, staged)
-        .filter(F.col("event_type") == "click")
+        sdf.filter(F.col("event_type") == "click")
         .select(F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("l_ts"))
     )
     purchases = (
-        stream_events(spark, staged)
-        .filter(F.col("event_type") == "purchase")
+        sdf.filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("r_user_id"),
@@ -2643,17 +2705,7 @@ def q_streaming_interval_join(spark, sf_dir):
         F.col("l_ts").alias("click_ts"),
         F.col("r_ts").alias("purchase_ts"),
     )
-    name = f"fdps_ij_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _drain(joined, "append")
 
 
 @query(
@@ -2668,28 +2720,14 @@ def q_streaming_dedup(spark, sf_dir):
     ``SELECT DISTINCT`` over one copy — the oracle. State is one key per
     event_id within the watermark horizon, evicted as the watermark
     advances."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     staged = tempfile.mkdtemp(prefix="fdps_dup_events_")
     src = table(spark, sf_dir, "events")
     src.write.mode("overwrite").parquet(staged)
     src.write.mode("append").parquet(staged)  # duplicate copy
-    name = f"fdps_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        sp.dedup_in_stream(sp.stream_events(spark, staged), watermark="365 days")
-        .select("event_id", "event_type", "value")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    sdf = sp.dedup_in_stream(sp.stream_events(spark, staged), watermark="365 days")
+    return _drain(sdf.select("event_id", "event_type", "value"), "append")
 
 
 @query(
@@ -2718,39 +2756,14 @@ def q_stateful_continuity(spark, sf_dir):
     maxFilesPerTrigger=1, so micro-batch boundaries are deterministic —
     which makes the stateful result fully SQL-expressible: per-(symbol,
     batch) first/last plus lag(last_close) across batches."""
-    import os
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import stateful_continuity
 
     s = _stocks(spark, sf_dir).select("symbol", "date", "open", "close")
-    staged = tempfile.mkdtemp(prefix="fdps_cont_")
-    s.filter(F.col("date") <= _date(CUTOFF)).coalesce(1).write.mode("overwrite").parquet(staged)
-    batch1 = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    s.filter(F.col("date") > _date(CUTOFF)).coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in batch1 else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    sdf = (
-        spark.readStream.schema(s.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+    sdf = _staged_stream(
+        spark,
+        [s.filter(F.col("date") <= _date(CUTOFF)), s.filter(F.col("date") > _date(CUTOFF))],
     )
-    name = f"fdps_cont_{uuid.uuid4().hex[:8]}"
-    q = (
-        stateful_continuity(sdf)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _drain(stateful_continuity(sdf), "append")
 
 
 @query(
@@ -2776,10 +2789,6 @@ def q_streaming_upsert_stocks(spark, sf_dir):
     proves the incremental sink converges to the one-shot merge.
     Micro-batch order is pinned by file mtimes + maxFilesPerTrigger=1,
     same staging trick as stateful_continuity."""
-    import os
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import stream_ingest_stocks
 
     s = _stocks(spark, sf_dir)
@@ -2787,25 +2796,10 @@ def q_streaming_upsert_stocks(spark, sf_dir):
     batch2 = s.filter(F.col("date").between(_date(OVERLAP_LO), _date(OVERLAP_HI))).withColumn(
         "close", F.round(F.col("close") * 1.5, 6)
     )
-    staged = tempfile.mkdtemp(prefix=f"fdps_upsrc_{uuid.uuid4().hex[:8]}_")
-    batch1.coalesce(1).write.mode("overwrite").parquet(staged)
-    first = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    batch2.coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    store = os.path.join(tempfile.mkdtemp(prefix="fdps_upstore_"), "store")
-    sdf = (
-        spark.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    q = stream_ingest_stocks(
-        sdf, store, tempfile.mkdtemp(prefix="fdps_ckpt_"), trigger_available_now=True
-    )
-    q.awaitTermination(300)
+    root = tempfile.mkdtemp(prefix="fdps_upstore_")
+    store = os.path.join(root, "store")
+    sdf = _staged_stream(spark, [batch1, batch2])
+    _wait(stream_ingest_stocks(sdf, store, os.path.join(root, "checkpoint")))
     return spark.read.parquet(store).select(
         "symbol", "date", "open", "high", "low", "close", "volume"
     )
@@ -4059,9 +4053,6 @@ def q_streaming_doc_quality(spark, sf_dir):
     the availableNow result equals the batch filter — the oracle. At
     scale this is the always-on crawl-intake filter; state is zero
     (pure projection+filter), so throughput is the batch plan's."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     docs = table(spark, sf_dir, "documents")
@@ -4074,17 +4065,7 @@ def q_streaming_doc_quality(spark, sf_dir):
     )
     stream = sp.stream_documents(spark, f"{staged}/b*")
     scored = text.quality_score(stream).filter(F.col("quality_score") >= 0.5)
-    name = f"fdps_docq_{uuid.uuid4().hex[:8]}"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _drain(scored, "append")
 
 
 @query(
@@ -4473,43 +4454,23 @@ def q_streaming_neardup_gate(spark, sf_dir):
     against batch 1's admissions). Result = the store read back.
     Oracle replays both admission rounds over the exact near-dup edge
     set. See streaming.neardup_gate."""
-    import os
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.extensions import dedup as dd
     from finance_data_pipeline_spark.streaming import neardup_gate
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    store = os.path.join(
-        tempfile.mkdtemp(prefix=f"fdps_ndstore_{uuid.uuid4().hex[:8]}_"), "store"
-    )
+    root = tempfile.mkdtemp(prefix=f"fdps_ndstore_{uuid.uuid4().hex[:8]}_")
+    store = os.path.join(root, "store")
     seed = docs.filter(F.col("doc_id") % 2 == 0).localCheckpoint()
     seed.write.mode("overwrite").parquet(f"{store}/docs/batch=seed")
     dd.minhash_signatures(seed).write.mode("overwrite").parquet(
         f"{store}/sigs/batch=seed"
     )
 
-    staged = tempfile.mkdtemp(prefix="fdps_ndsrc_")
-    docs.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    first = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode("append").parquet(
-        staged
+    sdf = _staged_stream(
+        spark,
+        [docs.filter(F.col("doc_id") % 4 == 1), docs.filter(F.col("doc_id") % 4 == 3)],
     )
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    sdf = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    q = neardup_gate(sdf, store, tempfile.mkdtemp(prefix="fdps_ckpt_"))
-    q.awaitTermination(300)
+    _wait(neardup_gate(sdf, store, os.path.join(root, "checkpoint")))
     return spark.read.parquet(f"{store}/docs").select("doc_id")
 
 
@@ -5316,40 +5277,12 @@ def q_streaming_running_totals(spark, sf_dir):
     deterministic micro-batches (ts-split staged files, forced mtime
     order, maxFilesPerTrigger=1). Integer micro-unit accumulation
     makes the running float total exact and SQL-replayable."""
-    import os
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     ev = table(spark, sf_dir, "events").select("event_type", "ts", "value")
-    staged = tempfile.mkdtemp(prefix="fdps_rt_")
     cut = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    ev.filter(F.col("ts") <= cut).coalesce(1).write.mode("overwrite").parquet(staged)
-    batch1 = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    ev.filter(F.col("ts") > cut).coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in batch1 else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    name = f"fdps_rt_{uuid.uuid4().hex[:8]}"
-    q = (
-        sp.stateful_running_totals(sdf)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    sdf = _staged_stream(spark, [ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)])
+    return _drain(sp.stateful_running_totals(sdf), "append")
 
 
 @query(
@@ -6026,15 +5959,7 @@ def q_streaming_session_windows(spark, sf_dir):
     end-of-stream are withheld; the SQL twin replays gaps-and-islands
     sessions WHERE session_end ≤ global max ts. Streaming semantics
     held to an exact hash check, not a rows-only pass."""
-    import tempfile
-    import uuid
-
-    ev = table(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts")
-    )
-    staged = tempfile.mkdtemp(prefix="fdps_ssw_")
-    ev.write.mode("overwrite").parquet(staged)
-    sdf = spark.readStream.schema(ev.schema).parquet(staged)
+    sdf = _staged_stream(spark, [_events_ts(spark, sf_dir).select("user_id", "ts")])
     out = (
         sdf.withWatermark("ts", "0 seconds")
         .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
@@ -6046,17 +5971,7 @@ def q_streaming_session_windows(spark, sf_dir):
             "n_events",
         )
     )
-    name = f"fdps_ssw_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _drain(out, "append")
 
 
 @query(
@@ -6086,12 +6001,7 @@ def q_streaming_interval_join_left(spark, sf_dir):
     unmatched rows WHERE cts + 1h < least(max cts, max pts); clicks
     whose window is still open at end-of-stream stay withheld.
     Outer-join streaming state semantics held to an exact hash check."""
-    import tempfile
-    import uuid
-
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts")
-    )
+    ev = _events_ts(spark, sf_dir)
     clicks = ev.filter("event_type = 'click'").select(
         "event_id", "user_id", F.col("ts").alias("cts")
     )
@@ -6100,20 +6010,8 @@ def q_streaming_interval_join_left(spark, sf_dir):
         F.col("user_id").alias("puser"),
         F.col("ts").alias("pts"),
     )
-    d1 = tempfile.mkdtemp(prefix="fdps_sijl_c_")
-    d2 = tempfile.mkdtemp(prefix="fdps_sijl_p_")
-    clicks.write.mode("overwrite").parquet(d1)
-    purch.write.mode("overwrite").parquet(d2)
-    sc = (
-        spark.readStream.schema(clicks.schema)
-        .parquet(d1)
-        .withWatermark("cts", "0 seconds")
-    )
-    sp = (
-        spark.readStream.schema(purch.schema)
-        .parquet(d2)
-        .withWatermark("pts", "0 seconds")
-    )
+    sc = _staged_stream(spark, [clicks]).withWatermark("cts", "0 seconds")
+    sp = _staged_stream(spark, [purch]).withWatermark("pts", "0 seconds")
     j = sc.join(
         sp,
         (F.col("user_id") == F.col("puser"))
@@ -6121,45 +6019,20 @@ def q_streaming_interval_join_left(spark, sf_dir):
         & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     )
-    name = f"fdps_sijl_{uuid.uuid4().hex[:8]}"
-    q = (
-        j.select("event_id", "pid")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _drain(j.select("event_id", "pid"), "append")
 
 
-def _staged_event_stream(spark, sf_dir):
-    """Two deterministic micro-batches of events (ts-split staged
-    files, forced mtime order, 1 file per trigger) — shared staging
-    for the output-mode queries."""
-    import os
-    import tempfile
-
-    ev = table(spark, sf_dir, "events").select(
-        "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
+def _omode_totals(spark, sf_dir, mode):
+    """Per-event_type count and micro-unit value total over two
+    ts-split micro-batches, drained in output ``mode``."""
+    ev = _events_ts(spark, sf_dir).select("event_type", "ts", "value")
     cut = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    staged = tempfile.mkdtemp(prefix="fdps_omode_")
-    ev.filter(F.col("ts") <= cut).coalesce(1).write.mode("overwrite").parquet(staged)
-    batch1 = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    ev.filter(F.col("ts") > cut).coalesce(1).write.mode("append").parquet(staged)
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in batch1 else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
-    return (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+    sdf = _staged_stream(spark, [ev.filter(F.col("ts") <= cut), ev.filter(F.col("ts") > cut)])
+    agg = sdf.groupBy("event_type").agg(
+        F.count("*").alias("n"),
+        F.sum(F.expr("cast(floor(value * 1000000 + 0.5) as bigint)")).alias("vmic"),
     )
+    return _drain(agg, mode)
 
 
 _OMODE_AGG_SQL = """b AS (
@@ -6191,25 +6064,7 @@ def q_streaming_update_totals(spark, sf_dir):
     batch touched). The oracle replays exactly that: cumulative
     count/micro-value per key at each batch where the key has events.
     Integer micro-units keep the float total exact."""
-    import tempfile
-    import uuid
-
-    sdf = _staged_event_stream(spark, sf_dir)
-    agg = sdf.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(F.expr("cast(floor(value * 1000000 + 0.5) as bigint)")).alias("vmic"),
-    )
-    name = f"fdps_upd_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _omode_totals(spark, sf_dir, "update")
 
 
 @query(
@@ -6224,25 +6079,7 @@ def q_streaming_complete_totals(spark, sf_dir):
     the final micro-batch, so the stream result equals the batch
     group-by — the mode a live dashboard reads. Same staged two-batch
     source as the update-mode query."""
-    import tempfile
-    import uuid
-
-    sdf = _staged_event_stream(spark, sf_dir)
-    agg = sdf.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(F.expr("cast(floor(value * 1000000 + 0.5) as bigint)")).alias("vmic"),
-    )
-    name = f"fdps_cmp_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _omode_totals(spark, sf_dir, "complete")
 
 
 def _src_h60(expr: str) -> str:
@@ -6769,8 +6606,6 @@ def q_custom_source_ohlcv_stream(spark, sf_dir):
     bit-for-bit, which is exactly what the shared oracle asserts.
     readBetweenOffsets replays committed ranges deterministically, so
     a crash re-delivers identical bars."""
-    import tempfile
-
     from finance_data_pipeline_spark.sources.ohlcv_source import (
         SyntheticOHLCVSource,
     )
@@ -6779,8 +6614,8 @@ def q_custom_source_ohlcv_stream(spark, sf_dir):
         spark.dataSource.register(SyntheticOHLCVSource)
     except Exception:
         pass  # already registered in this session
-    ckpt = tempfile.mkdtemp(prefix="fdps_src_ckpt_")
-    out = tempfile.mkdtemp(prefix="fdps_src_out_") + "/bars"
+    root = tempfile.mkdtemp(prefix="fdps_src_")
+    out, ckpt = os.path.join(root, "bars"), os.path.join(root, "checkpoint")
     prev = -1
     for _ in range(6):  # 30/12 -> 3 draining runs; bounded regardless
         q = (
@@ -6795,7 +6630,7 @@ def q_custom_source_ohlcv_stream(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _wait(q)
         n = spark.read.parquet(out).count()
         if n == prev:
             break
@@ -7121,8 +6956,6 @@ def q_streaming_decontaminated_intake(spark, sf_dir):
     must equal batch decontaminate() exactly; the oracle is the SAME
     SQL as decontaminated_corpus. Idempotent per-batch partition
     overwrite; no state store. See streaming.decontaminate_gate."""
-    import tempfile
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     docs = table(spark, sf_dir, "documents")
@@ -7142,12 +6975,12 @@ def q_streaming_decontaminated_intake(spark, sf_dir):
     train.filter(F.col("doc_id") % 2 == 1).write.mode("overwrite").parquet(
         f"{staged}/b1"
     )
-    out = tempfile.mkdtemp(prefix="fdps_decon_out_") + "/admitted"
+    root = tempfile.mkdtemp(prefix="fdps_decon_out_")
+    out = os.path.join(root, "admitted")
     stream = sp.stream_documents(spark, f"{staged}/b*")
-    q = sp.decontaminate_gate(
-        stream, bench_sh, out, tempfile.mkdtemp(prefix="fdps_ckpt_"), k=3
+    _wait(
+        sp.decontaminate_gate(stream, bench_sh, out, os.path.join(root, "checkpoint"), k=3)
     )
-    q.awaitTermination(300)
     return spark.read.parquet(out).select("doc_id")
 
 
@@ -7376,10 +7209,6 @@ def q_streaming_asof_enrichment(spark, sf_dir):
     union + last-ignorenulls plan per micro-batch inside foreachBatch
     (stream-stateless: no watermark state, the static side re-resolves
     each batch); idempotent batch-partition overwrite."""
-    import tempfile
-
-    from finance_data_pipeline_spark.streaming import pipeline as sp
-
     ev = table(spark, sf_dir, "events").select(
         "event_id",
         F.concat(F.lit("H"), (F.col("user_id") % 10).cast("string")).alias("symbol"),
@@ -7394,7 +7223,8 @@ def q_streaming_asof_enrichment(spark, sf_dir):
     ev.filter(F.col("event_id") % 2 == 1).write.mode("overwrite").parquet(
         f"{staged}/b1"
     )
-    out = tempfile.mkdtemp(prefix="fdps_asof_out_") + "/priced"
+    root = tempfile.mkdtemp(prefix="fdps_asof_out_")
+    out = os.path.join(root, "priced")
 
     def price_batch(batch, batch_id):
         rel.asof_join(
@@ -7405,13 +7235,12 @@ def q_streaming_asof_enrichment(spark, sf_dir):
         ).parquet(f"{out}/batch={batch_id}")
 
     stream = spark.readStream.schema(ev.schema).parquet(f"{staged}/b*")
-    q = (
+    _wait(
         stream.writeStream.foreachBatch(price_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
+        .option("checkpointLocation", os.path.join(root, "checkpoint"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
     return spark.read.parquet(out).select(
         "event_id", "symbol", "ts", "value", "close_asof"
     )
@@ -7675,36 +7504,16 @@ def q_streaming_late_data_policy(spark, sf_dir):
     in (or an on-time window withheld) fails the hash. Completes the
     watermark surface: dedup (ST3) and session/interval eviction
     (ST4+/ST8+) were pinned; the aggregate-state drop was not."""
-    import os
-    import tempfile
-    import uuid
-
-    ev = table(spark, sf_dir, "events").select(
-        "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
+    ev = _events_ts(spark, sf_dir).select("event_type", "ts", "value")
     d15 = F.lit("2024-01-15 00:00:00").cast("timestamp")
     d16 = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    staged = tempfile.mkdtemp(prefix="fdps_late_")
-    # NEWEST-FIRST staging (inverse of _staged_event_stream).
-    seen: list[set] = []
-    for i, part in enumerate(
+    sdf = _staged_stream(  # newest first
+        spark,
         [
             ev.filter(F.col("ts") >= d16),
             ev.filter((F.col("ts") >= d15) & (F.col("ts") < d16)),
             ev.filter(F.col("ts") < d15),
-        ]
-    ):
-        part.coalesce(1).write.mode("append" if i else "overwrite").parquet(staged)
-        names = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-        seen.append(names - set().union(*seen) if seen else names)
-    for i, names in enumerate(seen):
-        for f in names:
-            t = 1_000_000_000 * (i + 1)
-            os.utime(os.path.join(staged, f), (t, t))
-    sdf = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
+        ],
     )
     agg = (
         sdf.withWatermark("ts", "2 days")
@@ -7716,17 +7525,7 @@ def q_streaming_late_data_policy(spark, sf_dir):
             ).alias("vmic"),
         )
     )
-    name = f"fdps_late_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    return _drain(agg, "append").select(
         F.col("w.start").cast("date").alias("day"), "event_type", "n", "vmic"
     )
 
@@ -8243,9 +8042,7 @@ def q_label_prop_communities(spark, sf_dir):
 @query(
     "rolling_beta_30",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 mkt AS (SELECT date,
           CAST(sum(CAST(ret AS DECIMAL(38,12))) AS DOUBLE) / count(ret) AS mret
         FROM r WHERE ret IS NOT NULL GROUP BY date),
@@ -8759,28 +8556,14 @@ def q_streaming_dedup_watermark(spark, sf_dir):
     overlap-refetch pattern) under availableNow, so the result equals
     SELECT DISTINCT over one copy — the oracle. See
     pipeline.dedup_within_watermark."""
-    import tempfile
-    import uuid
-
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     staged = tempfile.mkdtemp(prefix="fdps_dupw_events_")
     src = table(spark, sf_dir, "events")
     src.write.mode("overwrite").parquet(staged)
     src.write.mode("append").parquet(staged)
-    name = f"fdps_dedupw_{uuid.uuid4().hex[:8]}"
-    q = (
-        sp.dedup_within_watermark(sp.stream_events(spark, staged), watermark="365 days")
-        .select("event_id", "event_type", "value")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    sdf = sp.dedup_within_watermark(sp.stream_events(spark, staged), watermark="365 days")
+    return _drain(sdf.select("event_id", "event_type", "value"), "append")
 
 
 # --- round-4 session 3, batch D: skyline / reconcile / PPR / eff tokens --
@@ -9151,9 +8934,7 @@ def q_global_token_rank(spark, sf_dir):
 @query(
     "robust_return_anomalies",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 rr AS (SELECT symbol, date, ret FROM r WHERE ret IS NOT NULL),
 med AS (SELECT symbol, quantile_cont(ret, 0.5) AS med FROM rr GROUP BY symbol),
 ad AS (SELECT rr.symbol, rr.date, rr.ret, med.med,
@@ -9176,13 +8957,7 @@ def q_robust_return_anomalies(spark, sf_dir):
     flat) nullifies the score and flags nothing in both engines.
     Two grouped aggregates + two joins back; 4 dp rounding absorbs
     the engines' interpolation-order ulp."""
-    s = _stocks(spark, sf_dir)
-    wl = Window.partitionBy("symbol").orderBy("date")
-    rr = s.select(
-        "symbol",
-        "date",
-        (F.col("close") / F.lag("close").over(wl) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    rr = _returns(spark, sf_dir)
     med = rr.groupBy("symbol").agg(F.percentile("ret", F.lit(0.5)).alias("med"))
     ad = rr.join(med, "symbol").select(
         "symbol", "date", "ret", F.abs(F.col("ret") - F.col("med")).alias("adev")
@@ -9314,9 +9089,7 @@ def q_store_change_feed(spark, sf_dir):
 @query(
     "capm_regression",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 mkt AS (SELECT date,
           CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE) / count(ret) AS mret
         FROM r WHERE ret IS NOT NULL GROUP BY date),
@@ -9410,36 +9183,16 @@ def q_streaming_versioned_commits(spark, sf_dir):
     the oracle — while v=1 remains pinned as the first batch's freeze
     (asserted in tests/test_round4c_ops.py). See
     pipeline.versioned_commit_sink."""
-    import os
-    import tempfile
-
     from finance_data_pipeline_spark import io as fio
     from finance_data_pipeline_spark.streaming import pipeline as sp
 
     e = table(spark, sf_dir, "events")
-    staged = tempfile.mkdtemp(prefix="fdps_vc_events_")
-    e.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    first = {f for f in os.listdir(staged) if not f.startswith(("_", "."))}
-    e.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(
-        staged
+    stream = _staged_stream(
+        spark, [e.filter(F.col("event_id") % 2 == 0), e.filter(F.col("event_id") % 2 == 1)]
     )
-    for f in os.listdir(staged):
-        if f.startswith(("_", ".")):
-            continue
-        t = 1_000_000_000 if f in first else 2_000_000_000
-        os.utime(os.path.join(staged, f), (t, t))
     store = tempfile.mkdtemp(prefix="fdps_vc_store_")
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    q = sp.versioned_commit_sink(
-        stream, store, tempfile.mkdtemp(prefix="fdps_ckpt_")
-    )
-    q.awaitTermination(300)
+    # the store reads only its manifest and v=N dirs
+    _wait(sp.versioned_commit_sink(stream, store, os.path.join(store, "_checkpoint")))
     return fio.read_snapshot(spark, store).select("event_id", "event_type", "value")
 
 
@@ -10279,15 +10032,8 @@ def q_streaming_ohlc_bars(spark, sf_dir):
     availableNow. Checked against the IDENTICAL BARS-CTE oracle as the
     batch fixture — stream/batch equivalence for the arg_min/arg_max
     aggregate family, which no other streaming row exercises."""
-    import tempfile
-    import uuid
-
-    from finance_data_pipeline_spark.streaming import stream_events
-
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
-    table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
     bars = (
-        stream_events(spark, staged)
+        _staged_stream(spark, [_events_ts(spark, sf_dir)])
         .select(
             F.concat(F.lit("H"), (F.col("user_id") % 10).cast("string")).alias("symbol"),
             F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
@@ -10303,17 +10049,7 @@ def q_streaming_ohlc_bars(spark, sf_dir):
             (F.count("*") * 1000).alias("volume"),
         )
     )
-    name = f"fdps_bars_{uuid.uuid4().hex[:8]}"
-    q = (
-        bars.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _drain(bars, "complete")
 
 
 # =========================================================================
@@ -10811,15 +10547,8 @@ def q_streaming_topk_hitters(spark, sf_dir):
     (allowed only in complete mode — the one output mode that rewrites
     the full result per trigger). Deterministic total via the DECIMAL
     sum; ties broken by user_id."""
-    import tempfile
-    import uuid
-
-    from finance_data_pipeline_spark.streaming import stream_events
-
-    staged = tempfile.mkdtemp(prefix="fdps_events_")
-    table(spark, sf_dir, "events").write.mode("overwrite").parquet(staged)
     agg = (
-        stream_events(spark, staged)
+        _staged_stream(spark, [_events_ts(spark, sf_dir)])
         .groupBy("user_id")
         .agg(
             F.count("*").cast("long").alias("n_events"),
@@ -10828,17 +10557,7 @@ def q_streaming_topk_hitters(spark, sf_dir):
         .orderBy(F.desc("total_value"), "user_id")
         .limit(20)
     )
-    name = f"fdps_topk_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="fdps_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return _drain(agg, "complete")
 
 
 # =========================================================================
@@ -11621,9 +11340,7 @@ def q_risk_adjusted_perf(spark, sf_dir):
 @query(
     "acf_ljung_box",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 mu AS (SELECT symbol,
          CAST(count(ret) AS BIGINT) AS n,
          CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
@@ -11708,9 +11425,7 @@ def q_acf_ljung_box(spark, sf_dir):
 @query(
     "cusum_break",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 mu AS (SELECT symbol,
          CAST(count(ret) AS BIGINT) AS n,
          CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
@@ -12452,9 +12167,7 @@ def q_spearman_corr_pairs(spark, sf_dir):
 @query(
     "var_cvar_95",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 v AS (SELECT symbol,
         CAST(count(ret) AS BIGINT) AS n_rets,
         quantile_cont(ret, 0.05) AS var95
@@ -12582,9 +12295,7 @@ def q_return_moments(spark, sf_dir):
 @query(
     "up_down_capture",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 mkt AS (SELECT date,
           CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
             / count(ret) AS mret
@@ -12625,12 +12336,7 @@ def q_up_down_capture(spark, sf_dir):
     The market frame is a per-date aggregate of ~n_symbols rows —
     broadcast back to the return stream, then ONE conditional
     DECIMAL-sum aggregate per symbol."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _returns(spark, sf_dir)
     mkt = r.groupBy("date").agg(
         (
             F.sum(F.col("ret").cast("decimal(38,18)")).cast("double")
@@ -12722,9 +12428,7 @@ def q_omega_tail_ratio(spark, sf_dir):
 @query(
     "win_loss_streaks",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 s AS (SELECT symbol, date,
         CASE WHEN ret > 0 THEN 1 WHEN ret < 0 THEN -1 ELSE 0 END AS sgn,
         row_number() OVER ({_W_DATE}) AS rn
@@ -12748,12 +12452,8 @@ def q_win_loss_streaks(spark, sf_dir):
     entirely integer arithmetic so the oracle replays bit-identically.
     Two ordered windows over the same per-symbol sort, then one
     bounded-key aggregate (≤ 3 signs × runs)."""
-    s = _stocks(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _returns(spark, sf_dir)
     sgn = (
         F.when(F.col("ret") > 0, 1).when(F.col("ret") < 0, -1).otherwise(0)
     ).alias("sgn")
@@ -13283,12 +12983,8 @@ def q_hurst_rs(spark, sf_dir):
     the float pipeline is a fixed IEEE expression tree in both
     engines — a long-memory statistic with a full hash oracle.
     Bounded state: blocks×3 rows per symbol, one window pass."""
-    s = _stocks(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("date")
-    r0 = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r0 = _returns(spark, sf_dir)
     r = r0.select(
         "symbol",
         F.round(F.col("ret") * 1_000_000_000, 0).cast("long").alias("rq"),
@@ -13660,9 +13356,7 @@ def q_black_scholes_grid(spark, sf_dir):
 @query(
     "min_var_pairs",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 al AS (SELECT a.symbol AS sa, b.symbol AS sb, a.ret AS x, b.ret AS y
        FROM r a JOIN r b ON a.date = b.date AND a.symbol < b.symbol
        WHERE a.ret IS NOT NULL AND b.ret IS NOT NULL),
@@ -13698,12 +13392,7 @@ def q_min_var_pairs(spark, sf_dir):
     plus the resulting annualized portfolio vol. One aligned self-join
     (the pairwise_correlation fan-out), ONE aggregate per pair; the
     closed forms are identical IEEE math in both engines."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _returns(spark, sf_dir)
     a, b = r.alias("a"), r.alias("b")
     al = a.join(
         b,
@@ -14564,9 +14253,7 @@ def q_link_pred_common_neighbors(spark, sf_dir):
 @query(
     "var_backtest_kupiec",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 v AS (SELECT symbol, quantile_cont(ret, 0.05) AS var95
       FROM r WHERE ret IS NOT NULL GROUP BY symbol),
 x AS (SELECT r.symbol,
@@ -14720,9 +14407,7 @@ def q_incremental_dedup_delta(spark, sf_dir):
 @query(
     "conditional_betas",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 mkt AS (SELECT date,
           CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
             / count(ret) AS mret
@@ -14764,12 +14449,7 @@ def q_conditional_betas(spark, sf_dir):
     vacuously NULL; above/below-average days split ~50/50 under any
     drift. One conditional DECIMAL-sum aggregate per (symbol, regime);
     closed forms identical IEEE both engines."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _returns(spark, sf_dir)
     mkt = r.groupBy("date").agg(
         (
             F.sum(F.col("ret").cast("decimal(38,18)")).cast("double")
@@ -14912,9 +14592,7 @@ def q_bs_greeks(spark, sf_dir):
 @query(
     "ks_normality",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 s AS (SELECT symbol,
         CAST(count(ret) AS BIGINT) AS n,
         CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE) AS sr,
@@ -14948,12 +14626,7 @@ def q_ks_normality(spark, sf_dir):
     DECIMAL-exact and the empirical CDF is integer ranks (deterministic
     date tiebreak). The fat-tail rejection readout that motivates the
     tail-risk family. One ranked window + one aggregate per symbol."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _returns(spark, sf_dir)
     dec = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")
     st = r.groupBy("symbol").agg(
         F.count("ret").cast("long").alias("n"),
@@ -15006,9 +14679,7 @@ def q_ks_normality(spark, sf_dir):
 @query(
     "spectral_power_grid",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 t AS (SELECT symbol, ret,
         row_number() OVER ({_W_DATE}) AS tt
       FROM r WHERE ret IS NOT NULL),
@@ -15046,12 +14717,8 @@ def q_spectral_power_grid(spark, sf_dir):
     and 1e-9 quantization gives ~9 orders of margin over that — so the
     power statistic replays exactly. One window pass, one 3×-broadcast
     fan-out, one integer aggregate per (symbol, period)."""
-    s = _stocks(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _returns(spark, sf_dir)
     t = r.select("symbol", "ret", F.row_number().over(w).alias("tt"))
     periods = spark.createDataFrame([(5,), (10,), (21,)], "period int")
     g = t.crossJoin(F.broadcast(periods))
@@ -15092,9 +14759,7 @@ def q_spectral_power_grid(spark, sf_dir):
 @query(
     "dow_effect",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 d AS (SELECT symbol, CAST(dayofweek(date) + 1 AS BIGINT) AS dow, ret
       FROM r WHERE ret IS NOT NULL),
 s AS (SELECT symbol, dow,
@@ -15117,12 +14782,7 @@ def q_dow_effect(spark, sf_dir):
     differ: Spark dayofweek is 1=Sunday..7, DuckDB's is 0=Sunday..6,
     so the oracle adds 1 — the hash check pins the alignment. One
     window pass + one bounded-key aggregate."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _returns(spark, sf_dir)
     d = r.select(
         "symbol", F.dayofweek("date").cast("long").alias("dow"), "ret"
     )
@@ -15151,9 +14811,7 @@ def q_dow_effect(spark, sf_dir):
 @query(
     "runs_test",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 sgn AS (SELECT symbol, date,
           CASE WHEN ret >= 0 THEN 1 ELSE 0 END AS up,
           lag(CASE WHEN ret >= 0 THEN 1 ELSE 0 END)
@@ -15186,12 +14844,8 @@ def q_runs_test(spark, sf_dir):
     its 95% rejection are closed forms of those integers, identical
     IEEE in both engines. The sign-level complement of acf_ljung_box's
     magnitude-level serial-dependence test."""
-    s = _stocks(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _returns(spark, sf_dir)
     up = F.when(F.col("ret") >= 0, 1).otherwise(0)
     sgn = r.select(
         "symbol", up.alias("up"), F.lag(up).over(w).alias("prev_up")
@@ -15325,9 +14979,7 @@ def q_quality_score_auc(spark, sf_dir):
 @query(
     "es_backtest_z",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 v AS (SELECT symbol,
         quantile_cont(ret, 0.05) AS var95,
         CAST(count(ret) AS BIGINT) AS n
@@ -15407,9 +15059,7 @@ def q_es_backtest_z(spark, sf_dir):
 @query(
     "information_ratio",
     f"""WITH {STOCKS},
-r AS (SELECT symbol, date,
-        close / lag(close) OVER ({_W_DATE}) - 1 AS ret
-      FROM stocks),
+{_RET_CTE},
 mkt AS (SELECT date,
           CAST(sum(CAST(ret AS DECIMAL(38,18))) AS DOUBLE)
             / count(ret) AS mret
@@ -15435,12 +15085,7 @@ def q_information_ratio(spark, sf_dir):
     the relative-performance companion of risk_adjusted_perf's
     absolute Sharpe. DECIMAL-exact excess-return sufficient sums; one
     broadcast market join, one aggregate per symbol."""
-    s = _stocks(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("date")
-    r = s.select(
-        "symbol", "date",
-        (F.col("close") / F.lag("close").over(w) - 1).alias("ret"),
-    ).filter(F.col("ret").isNotNull())
+    r = _returns(spark, sf_dir)
     mkt = r.groupBy("date").agg(
         (
             F.sum(F.col("ret").cast("decimal(38,18)")).cast("double")

@@ -193,7 +193,6 @@ def stream_ingest_stocks(
     bars: DataFrame,
     store_path: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ):
     """foreachBatch upsert sink: each micro-batch merges into the
     partitioned store with the same J5 merge the batch path uses.
@@ -226,9 +225,7 @@ def stream_ingest_stocks(
             batch.unpersist()
 
     writer = bars.writeStream.foreachBatch(merge_batch).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def neardup_gate(
@@ -236,7 +233,6 @@ def neardup_gate(
     store_path: str,
     checkpoint: str,
     threshold: float = 0.7,
-    trigger_available_now: bool = True,
 ):
     """Streaming ingestion near-dup gate (ST2×X2): each micro-batch of
     documents is MinHash-signed, LSH-banded against the store's
@@ -309,12 +305,8 @@ def neardup_gate(
             accepted.select(F.col("doc_id").alias("_id")), "_id", "left_semi"
         ).write.mode("overwrite").parquet(f"{store_path}/sigs/batch={batch_id}")
 
-    writer = docs.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = docs.writeStream.foreachBatch(gate).option("checkpointLocation", checkpoint)
+    return writer.trigger(availableNow=True).start()
 
 
 def decontaminate_gate(
@@ -323,7 +315,6 @@ def decontaminate_gate(
     out_path: str,
     checkpoint: str,
     k: int = 3,
-    trigger_available_now: bool = True,
 ):
     """Streaming decontamination intake gate (ST2×X6) — the third
     intake gate next to the quality filter (stateless) and the
@@ -359,12 +350,8 @@ def decontaminate_gate(
             f"{out_path}/batch={batch_id}"
         )
 
-    writer = docs.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = docs.writeStream.foreachBatch(gate).option("checkpointLocation", checkpoint)
+    return writer.trigger(availableNow=True).start()
 
 
 def stateful_running_totals(events: DataFrame) -> DataFrame:

@@ -416,7 +416,7 @@ def test_custom_ohlcv_stream_offsets_resume_and_match_batch(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300)
         return spark.read.parquet(out).count()
 
     # 25 days x 2 symbols in 10-day steps: 20, 40, 50, then a no-op run

@@ -749,7 +749,7 @@ def test_streaming_versioned_commits_pin_batch_prefixes(spark, tmp_path):
         spark.readStream.schema(e.schema).option("maxFilesPerTrigger", "1").parquet(staged)
     )
     q = sp.versioned_commit_sink(stream, store, str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
     assert fio.read_snapshot(spark, store, version=1).count() == 6
     assert fio.read_snapshot(spark, store).count() == 10
 
@@ -774,7 +774,7 @@ def test_versioned_commit_sink_resumes_from_checkpoint(spark, tmp_path):
     stream = (
         spark.readStream.schema(e.schema).option("maxFilesPerTrigger", "1").parquet(staged)
     )
-    sp.versioned_commit_sink(stream, store, ckpt).awaitTermination(300)
+    assert sp.versioned_commit_sink(stream, store, ckpt).awaitTermination(300)
     assert fio.read_snapshot(spark, store).count() == 4
     v_after_first = 1
     # second file arrives; resume from the same checkpoint
@@ -782,7 +782,7 @@ def test_versioned_commit_sink_resumes_from_checkpoint(spark, tmp_path):
     stream2 = (
         spark.readStream.schema(e.schema).option("maxFilesPerTrigger", "1").parquet(staged)
     )
-    sp.versioned_commit_sink(stream2, store, ckpt).awaitTermination(300)
+    assert sp.versioned_commit_sink(stream2, store, ckpt).awaitTermination(300)
     import json
 
     with open(os.path.join(store, "manifest.json")) as f:

@@ -33,7 +33,7 @@ def _run_stream_to_memory(sdf, name: str, checkpoint: str, output_mode: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
     return q
 
 
@@ -58,6 +58,45 @@ def test_stream_batch_equivalence_daily_aggregate(spark, tmp_path):
     assert len(got) > 0
 
 
+def test_drain_raises_on_timeout_and_stops_the_query(spark, tmp_path, monkeypatch):
+    """A stream still running at the timeout raises instead of handing
+    back a half-filled memory table, and is not left running."""
+    import tempfile
+
+    from finance_data_pipeline_spark import registry
+
+    monkeypatch.setattr(registry, "_STREAM_TIMEOUT_S", 0.001)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ev = table(spark, SF_DIR, "events")
+    sdf = registry._staged_stream(spark, [ev.filter("event_id % 2 = 0"), ev])
+    with pytest.raises(TimeoutError):
+        registry._drain(sdf.groupBy("event_type").count(), "complete")
+    assert not spark.streams.active
+
+
+def test_drained_queries_leave_no_temp_dirs(spark, tmp_path, monkeypatch):
+    """Memory-sink registry queries delete their staged input and
+    checkpoint once drained; the returned frames still read the rows,
+    which match the DuckDB oracle."""
+    import os
+    import tempfile
+
+    import duckdb
+
+    from finance_data_pipeline_spark.registry import ORACLES, QUERIES
+    from finance_data_pipeline_spark.schemas import DRIVER_TABLES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    con = duckdb.connect()
+    for t in DRIVER_TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    for name in ("streaming_complete_totals", "streaming_running_totals"):
+        df = QUERIES[name](spark, SF_DIR)
+        assert os.listdir(tmp_path) == [], name
+        got = sorted(tuple(r) for r in df.collect())
+        assert got and got == sorted(con.sql(ORACLES[name]).fetchall()), name
+
+
 def test_stream_dedup_drops_duplicate_event_ids(spark, tmp_path):
     """dedup_in_stream keeps exactly one row per event_id across
     micro-batches (the reference's refetch-overlap tolerance)."""
@@ -80,7 +119,7 @@ def test_stream_dedup_drops_duplicate_event_ids(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300)
 
     run_once()
     assert spark.read.parquet(out).count() == 500
@@ -119,7 +158,7 @@ def test_stateful_continuity_detects_gap_across_restart(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300)
 
     bars(1, 100.0).write.mode("overwrite").parquet(src)
     run_once()
@@ -153,12 +192,12 @@ def test_foreachbatch_upsert_converges_to_batch_merge(spark, tmp_path):
 
     b1.write.mode("overwrite").parquet(src)
     sdf = spark.readStream.schema(schema_ddl).parquet(src)
-    stream_ingest_stocks(sdf, store, ckpt).awaitTermination(300)
+    assert stream_ingest_stocks(sdf, store, ckpt).awaitTermination(300)
     assert spark.read.parquet(store).count() == b1.count()
 
     b2.write.mode("append").parquet(src)
     sdf = spark.readStream.schema(schema_ddl).parquet(src)
-    stream_ingest_stocks(sdf, store, ckpt).awaitTermination(300)
+    assert stream_ingest_stocks(sdf, store, ckpt).awaitTermination(300)
 
     got = spark.read.parquet(store)
     # Key-unique, and overlapping keys carry batch-2 closes (new wins).
@@ -186,7 +225,7 @@ def test_foreachbatch_upsert_is_partition_scoped(spark, tmp_path):
     both = stocks.filter(F.col("symbol").isin(s_keep, s_touch))
     both.write.mode("overwrite").parquet(src)
     sdf = spark.readStream.schema(schema_ddl).parquet(src)
-    stream_ingest_stocks(sdf, store, ckpt).awaitTermination(300)
+    assert stream_ingest_stocks(sdf, store, ckpt).awaitTermination(300)
 
     def part_files(sym):
         """File list + mtime + content digest: untouched partitions must
@@ -211,7 +250,7 @@ def test_foreachbatch_upsert_is_partition_scoped(spark, tmp_path):
         "append"
     ).parquet(src)
     sdf = spark.readStream.schema(schema_ddl).parquet(src)
-    stream_ingest_stocks(sdf, store, ckpt).awaitTermination(300)
+    assert stream_ingest_stocks(sdf, store, ckpt).awaitTermination(300)
 
     assert part_files(s_keep) == keep_before, (
         "untouched symbol partition was rewritten — merge is not partition-scoped"
@@ -267,7 +306,7 @@ def test_neardup_gate_admits_novel_blocks_dups_and_indexes_admissions(spark, tmp
     sdf = (
         spark.readStream.schema(b1.schema).option("maxFilesPerTrigger", "1").parquet(src)
     )
-    neardup_gate(sdf, store, str(tmp_path / "ckpt")).awaitTermination(300)
+    assert neardup_gate(sdf, store, str(tmp_path / "ckpt")).awaitTermination(300)
 
     rows = spark.read.parquet(f"{store}/docs").collect()
     got = {r.doc_id for r in rows}
@@ -309,7 +348,7 @@ def test_neardup_gate_survives_checkpoint_restart(spark, tmp_path):
 
     # Run 1: only batch 1 exists; availableNow drains it and stops.
     b1.coalesce(1).write.parquet(src)
-    neardup_gate(
+    assert neardup_gate(
         spark.readStream.schema(schema).parquet(src), store, ckpt
     ).awaitTermination(300)
     after_run1 = {
@@ -320,7 +359,7 @@ def test_neardup_gate_survives_checkpoint_restart(spark, tmp_path):
     # Simulated restart: a NEW query object, same checkpoint/store,
     # with batch 2's files appended to the source.
     b2.coalesce(1).write.mode("append").parquet(src)
-    neardup_gate(
+    assert neardup_gate(
         spark.readStream.schema(schema).parquet(src), store, ckpt
     ).awaitTermination(300)
 
@@ -383,7 +422,7 @@ def test_stateful_continuity_under_rocksdb_state_store(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         rows = {
             (r.event_type, r.cum_rows): r.cum_value_micros
             for r in spark.table("rocks_rt").collect()
@@ -446,7 +485,7 @@ def test_tws_running_totals_matches_legacy_api_when_protobuf_present(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         rows = {
             (r.event_type, r.cum_rows): r.cum_value_micros
             for r in spark.table("tws_rt").collect()

@@ -379,7 +379,7 @@ def test_stateful_running_totals_accumulates_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.table("rt_test").collect()
     click = sorted(
         [r for r in rows if r.event_type == "click"], key=lambda r: r.cum_rows

@@ -18,7 +18,9 @@ frame, and the captured plan reads them back as ``Scan ExistingRDD``.
 
 Expression ids (``#<n>``), exchange ``plan_id=<n>`` and RDD ``[<n>]`` ids
 are stripped: they count up per session, so without the strip every
-capture differs from every other. A before/after diff of two captures is
+capture differs from every other. The random names of the ``fdps_*`` temp
+dirs and memory tables that streaming and store queries create are masked
+to ``fdps_*`` for the same reason. A before/after diff of two captures is
 then empty exactly when the plans are the same.
 """
 
@@ -34,11 +36,13 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 _SESSION_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+(?=\])")
+_TEMP_NAMES = re.compile(r"\bfdps_\w+")
 
 
 def normalize(plan: str) -> str:
-    """Drop the per-session counters from a formatted plan."""
-    return _SESSION_IDS.sub(lambda m: "#" if m.group().startswith("#") else "", plan)
+    """Drop the per-session counters and temp names from a formatted plan."""
+    plan = _SESSION_IDS.sub(lambda m: "#" if m.group().startswith("#") else "", plan)
+    return _TEMP_NAMES.sub("fdps_*", plan)
 
 
 def main() -> None:
